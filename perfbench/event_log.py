@@ -1,10 +1,11 @@
 """The event-log half of the ``spark`` workload: writes beside reads.
 
-Each pass produces small batches through ``EventStream.produce``, each
+Each pass produces batches through ``EventStream.produce``, each
 followed by a cursor ``EventStream.consume`` (glob plus version
-vector).  It then reads the pass back in full, writes the same events
-through the ``flo`` sink, and drains them once through the ``flo``
-streaming source (partitioned reader, ``availableNow``).
+vector).  It then reads the pass back in full and writes the same
+events through the ``flo`` sink.  After the last pass, every event is
+drained once through the ``flo`` streaming source (partitioned reader,
+``availableNow``).
 
 It uses the storage layers the catalog only reads, and the segment
 codec without the server.  Every event body starts with its 8-byte
@@ -29,8 +30,12 @@ REGIONS = ("eu", "us", "ap")
 KINDS = ("created", "updated", "deleted")
 #: selects about a third of the events
 GLOB = "/*/eu/*"
-BATCHES_PER_PASS = 3
-EVENTS_PER_BATCH = 300
+BATCHES_PER_PASS = 2
+#: the smaller of the two batch sizes at which BASELINE.md reports the
+#: program's own produce benchmark (``python -m flo_spark bench-produce``),
+#: with that benchmark's 1 KiB bodies
+EVENTS_PER_BATCH = 5000
+BODY_BYTES = 1024
 
 
 def namespaces() -> list[str]:
@@ -64,19 +69,20 @@ class EventLog:
         self.produced = 0
         self.highest = 0  # stream-wide highest counter acknowledged
         self.native_heads = {p: 0 for p in range(1, PARTITIONS + 1)}
-        self.drain_start: dict[int, int] = {}
+        self.last_write_start: dict[int, int] = {}
+        self.drain_s = 0.0
         self.checksum_gen = self.checksum_log = self.checksum_drain = 0
         self.files = 0
         self.warm_events = 0
         self.sample: list = []
-        keys = ("produce_ms", "consume_ms", "head_ms", "write_s", "drain_s", "produce_jobs")
+        keys = ("produce_ms", "consume_ms", "head_ms", "write_s", "produce_jobs")
         self.warm = {k: [] for k in keys}
 
     def _batch(self) -> list[tuple[str, bytes]]:
         out = []
         for _ in range(EVENTS_PER_BATCH):
             self.produced += 1
-            body = struct.pack(">Q", self.produced) + self.rng.randbytes(self.rng.randint(24, 504))
+            body = struct.pack(">Q", self.produced) + self.rng.randbytes(BODY_BYTES - 8)
             out.append((self.rng.choice(self.ns_list), body))
         return out
 
@@ -140,6 +146,7 @@ class EventLog:
         self.checksum_log += sum(event_checksum(ns, b) for _c, _a, ns, b in rows)
 
         # the same events through the flo sink
+        self.last_write_start = dict(self.native_heads)
         t0 = time.perf_counter()
         with tr.span("sources.flo_datasource", "write", op):
             stream.consume(version_vector=pass_vv).select(
@@ -147,15 +154,22 @@ class EventLog:
             ).write.format("flo").mode("append").save(self.native_dir)
         rec["write_s"].append(time.perf_counter() - t0)
         res.op()
+        for c, a, _ns, _b in rows:
+            self.native_heads[a] = max(self.native_heads[a], c)
+        if warm:
+            self.warm_events += len(pass_events)
 
-        # and drained once through the flo streaming source
-        name = f"perfbench_drain_{pno}"
-        self.drain_start = dict(self.native_heads)
+    def drain(self) -> None:
+        """Every event written through the sink, drained once through the
+        ``flo`` streaming source into a memory sink."""
+        tr, res, spark = self.ctx.tracer, self.ctx.result, self.spark
+        name = "perfbench_drain"
+        start = {p: 0 for p in self.native_heads}
         t0 = time.perf_counter()
-        with tr.span("streaming", "flo_drain", op):
+        with tr.span("streaming", "flo_drain", tr.new_op()):
             q = (
                 spark.readStream.format("flo")
-                .option("startpositions", json.dumps(self.drain_start))
+                .option("startpositions", json.dumps(start))
                 .load(self.native_dir)
                 .writeStream.format("memory")
                 .queryName(name)
@@ -164,33 +178,28 @@ class EventLog:
             )
             q.awaitTermination()
             drained = _rows(spark.table(name))
-        rec["drain_s"].append(time.perf_counter() - t0)
+        self.drain_s = time.perf_counter() - t0
         res.op()
-        res.problems.extend(
-            check_ids_once(set(pass_events), [gen_id(b) for *_x, b in drained], f"pass {pno} flo drain")
-        )
-        self.checksum_drain += sum(event_checksum(ns, b) for _c, _a, ns, b in drained)
-        for c, a, _ns, _b in drained:
-            self.native_heads[a] = max(self.native_heads[a], c)
+        want = set(range(1, self.produced + 1))
+        res.problems.extend(check_ids_once(want, [gen_id(b) for *_x, b in drained], "flo drain"))
+        self.checksum_drain = sum(event_checksum(ns, b) for _c, _a, ns, b in drained)
         spark.catalog.dropTempView(name)
-        if warm:
-            self.warm_events += len(pass_events)
 
     def planned_files(self) -> None:
         """Files a version-vector-pinned ``FloBatchReader`` plans, against
-        all files, with the cursor where the last drain started."""
+        all files, with the cursor where the last pass's write started."""
         from flo_spark.sources.flo_datasource import FloBatchReader
         from flo_spark.sources.flo_segment import list_segment_files
 
         total = sum(len(e) for e in list_segment_files(self.native_dir).values())
-        opts = {"path": self.native_dir, "startpositions": json.dumps(self.drain_start)}
+        opts = {"path": self.native_dir, "startpositions": json.dumps(self.last_write_start)}
         with self.ctx.tracer.span("sources.flo_datasource", "partitions"):
             planned = len(FloBatchReader(opts).partitions())
         L = self.ctx.result.layer
         L["sources.flo_datasource.files_planned"] = (planned, "count")
         L["sources.flo_datasource.files_total"] = (total, "count")
 
-    def finish(self, reports, n_passes: int) -> None:
+    def finish(self, reports) -> None:
         """Checks over the whole run, then the layer metrics (the codec
         probe reads the native files, so the session may be gone)."""
         res, tr, w = self.ctx.result, self.ctx.tracer, self.warm
@@ -199,23 +208,21 @@ class EventLog:
         L = res.layer
         n_warm_batches = len(w["produce_ms"])
         L["log_produce_eps"] = (n_warm_batches * EVENTS_PER_BATCH / (sum(w["produce_ms"]) / 1e3), "events/s")
-        L["log_consume_ms"] = (median(w["consume_ms"]), "ms")
         L["native_write_eps"] = (self.warm_events / sum(w["write_s"]), "events/s")
-        L["native_drain_eps"] = (self.warm_events / sum(w["drain_s"]), "events/s")
+        L["native_drain_eps"] = (self.produced / self.drain_s, "events/s")
         L["sources.event_table.produce_ms"] = (median(w["produce_ms"]), "ms")
         L["sources.event_table.produce_jobs"] = (median(w["produce_jobs"]), "count")
         L["sources.event_table.consume_ms"] = (median(w["consume_ms"]), "ms")
         L["sources.event_table.head_ms"] = (median(w["head_ms"]), "ms")
         L["sources.event_table.files"] = (self.files, "count")
         L["sources.flo_datasource.write_s"] = (median(w["write_s"]), "s")
-        phases = spark_util.phase_sums(reports, "perfbench_drain_", STREAM_PHASES)
+        phases = spark_util.phase_sums(reports, "perfbench_drain", STREAM_PHASES)
         for p, v in phases.items():
-            L[f"streaming.flo_drain.{p}_ms"] = (v / n_passes, "ms")
+            L[f"streaming.flo_drain.{p}_ms"] = (v, "ms")
         if tr.enabled:
             layer_probe.segment_and_glob(
                 self.ctx, self.native_dir, self.sample, self.ns_list, GLOB, self.produced
             )
-            L["sources.flo_datasource.bytes_per_event"] = L["sources.flo_segment.bytes_per_event"]
 
     def end_to_end(self) -> dict[str, tuple[float, str]]:
         """The write rate and round latency of the warm passes: writes

@@ -52,9 +52,7 @@ END_TO_END = {
 def _per_layer() -> dict[str, str]:
     m = {
         # tcp_log phases
-        "produce_eps": "events/s",
         "consume_eps": "events/s",
-        "tail_round_ms": "ms",
         "server_peak_rss_mb": "MB",
         "protocol.client.produce_many_ms": "ms",
         "protocol.client.produce_us.p50": "us",
@@ -95,7 +93,6 @@ def _per_layer() -> dict[str, str]:
         {
             # spark: event log
             "log_produce_eps": "events/s",
-            "log_consume_ms": "ms",
             "native_write_eps": "events/s",
             "native_drain_eps": "events/s",
             "sources.event_table.produce_ms": "ms",
@@ -104,7 +101,6 @@ def _per_layer() -> dict[str, str]:
             "sources.event_table.head_ms": "ms",
             "sources.event_table.files": "count",
             "sources.flo_datasource.write_s": "s",
-            "sources.flo_datasource.bytes_per_event": "B",
             "sources.flo_datasource.files_planned": "count",
             "sources.flo_datasource.files_total": "count",
             "session.start_s": "s",

@@ -37,6 +37,7 @@ from metrics import END_TO_END, LAYERS, PER_LAYER  # noqa: E402
 
 BOOT_S = seconds_since_process_start()  # interpreter start up to T0
 WORKLOADS = ("tcp_log", "spark")
+DRIVER_MEM = "2g"
 
 
 class Context:
@@ -68,10 +69,8 @@ def _environment(work: str) -> None:
     os.environ["PYTHONPATH"] = ROOT + os.pathsep + os.environ.get("PYTHONPATH", "")
     os.environ["TZ"] = "UTC"
     time.tzset()
-    ncpu = len(os.sched_getaffinity(0))
-    want = int(os.environ.get("SPARK_GRAFT_CPUS", ncpu))
-    os.environ["SPARK_GRAFT_CPUS"] = str(max(1, min(want, ncpu)))
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "2g")
+    os.environ["SPARK_GRAFT_CPUS"] = str(len(os.sched_getaffinity(0)))
+    os.environ["SPARK_GRAFT_DRIVER_MEM"] = DRIVER_MEM
     import tempfile
 
     tempfile.tempdir = tmp
@@ -97,6 +96,7 @@ def main() -> int:
     try:
         _environment(work)
         host["spark_cpus"] = int(os.environ["SPARK_GRAFT_CPUS"])
+        host["spark_driver_mem"] = DRIVER_MEM
         ctx = Context(args, work)
         os.chdir(work)
         if args.workload == "tcp_log":
