@@ -28,16 +28,6 @@ def utf8(data: Column) -> Column:
     return F.decode(data, "UTF-8")
 
 
-def utf8_lossy(data: Column) -> Column:
-    """LossyStringCodec: replaces invalid sequences (codec/mod.rs:64-74).
-
-    try_to_binary/decode with replacement: Spark's decode already
-    substitutes U+FFFD for malformed input when not in ANSI mode; we
-    additionally null-guard.
-    """
-    return F.when(data.isNull(), None).otherwise(F.decode(data, "UTF-8"))
-
-
 def json(data: Column, schema: T.StructType | str) -> Column:
     """SerdeJsonCodec: typed JSON view (codec/serde.rs:11-38)."""
     return F.from_json(utf8(data), schema)

@@ -61,40 +61,6 @@ def shingle_hashes(text: Column, k: int = 3) -> Column:
     return F.transform(word_shingles(text, k), lambda s: F.xxhash64(s))
 
 
-def minhash_signature(hashes: Column, num_hashes: int = 64, seed: int = 42) -> Column:
-    """MinHash signature: array of per-permutation minima.
-
-    Each permutation is h_i(x) = (a_i * x + b_i) mod M31 over the
-    shingle xxhash64 values.  Evaluated JVM-side as ONE ``aggregate``
-    pass over the shingle array, folding all ``num_hashes`` minima at
-    once via ``zip_with`` against a literal (a, b) parameter array.
-    The single-traversal shape matters: the input ``hashes`` column is
-    usually an expression (split/slice/xxhash64 over raw text), and
-    Catalyst's project-collapse inlines it into every consumer — the
-    naive 64×transform/array_min formulation recomputes the shingle
-    pipeline 64 times per row; this one computes it once."""
-    params = _hash_params(num_hashes, seed)
-    params_arr = F.array(
-        *[
-            F.struct(F.lit(a).alias("a"), F.lit(b).alias("b"))
-            for a, b in params
-        ]
-    )
-    init = F.array_repeat(F.lit(_MERSENNE).cast("long"), num_hashes)
-    return F.aggregate(
-        # fold arbitrary 64-bit hashes into [0, M31) once per element
-        F.transform(hashes, lambda x: F.pmod(x, F.lit(_MERSENNE))),
-        init,
-        lambda acc, x: F.zip_with(
-            acc,
-            params_arr,
-            lambda m, p: F.least(
-                m, (p["a"] * x + p["b"]) % F.lit(_MERSENNE)
-            ),
-        ),
-    )
-
-
 def minhash_signatures(
     df: DataFrame,
     id_col: str = "doc_id",

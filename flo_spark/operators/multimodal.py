@@ -51,18 +51,6 @@ FEATURE_SCHEMA = T.StructType(
 )
 
 
-def _fake_decode(payload: bytes, feat_dim: int = 8) -> list[float]:
-    """STUB decode: deterministic pseudo-features from a content hash.
-
-    Replace with a real decoder (PIL image -> resize -> pixel stats,
-    librosa frame-sample, ...) when the codec libraries are available.
-    """
-    if payload is None:
-        return [0.0] * feat_dim
-    digest = hashlib.sha256(payload).digest()
-    return [b / 255.0 for b in digest[:feat_dim]]
-
-
 def extract_features(
     assets: DataFrame,
     id_col: str = "asset_id",

@@ -70,17 +70,6 @@ def _hyperplanes(dim: int, num_planes: int, seed: int = 42) -> np.ndarray:
     return rng.randn(num_planes, dim)
 
 
-def lsh_bucket(vec: Column, dim: int, num_planes: int = 12, seed: int = 42) -> Column:
-    """P-bit random-hyperplane signature as an integer bucket id."""
-    planes = _hyperplanes(dim, num_planes, seed)
-    bucket = F.lit(0).cast("long")
-    for p in range(num_planes):
-        plane = F.array(*[F.lit(float(v)) for v in planes[p]])
-        bit = (dot(vec, plane) > 0).cast("long")
-        bucket = bucket + F.shiftleft(bit, p)
-    return bucket
-
-
 def lsh_bucket_np(dim: int, num_planes: int = 12, seed: int = 42):
     """Arrow-vectorized P-bit hyperplane signature (pandas_udf): one
     matmul per batch instead of P interpreted aggregate-folds per row.

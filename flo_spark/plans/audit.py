@@ -1,19 +1,19 @@
-#!/usr/bin/env python3
-"""Round-9 optimization measurement harness (guide §1.2 step 1).
+"""Static plan audit over the query catalog.
 
-Static plan audit over declared queries: per-table parquet scan
-counts (the fork-rescan hazard), Exchange count, join strategies,
-and Python-boundary nodes, from ``explain("formatted")``.  Writes
-one summary line per entry; optionally dumps the formatted plan to
-``plans/r09/<name>_<tag>.txt`` for the entries named on the CLI.
+Per entry it prints one summary line from ``explain("formatted")``:
+per-table parquet scan counts (the fork-rescan hazard), Exchange
+count, join strategies, Python-boundary nodes and top-k nodes.  It
+can also dump the formatted plan of named entries to
+``<out>/<name>_<tag>.txt``.
 
-Usage:
-  python plans/r09/audit_plans.py [--sf DIR] [--dump NAME ...] \
-      [--tag before|after] [--only NAME ...]
+Usage::
 
-NOTE: entries that localCheckpoint/persist eagerly execute those
-stages at build time — run at a small SF unless measuring bench
-scale.  Never run concurrently with pytest or bench.
+  python -m flo_spark.plans.audit --out DIR [--sf DIR] \
+      [--dump NAME ...] [--tag before|after] [--only NAME ...]
+
+Entries that localCheckpoint/persist execute those stages at build
+time, so run at a small SF unless measuring bench scale, and never
+concurrently with pytest or the bench.
 """
 
 from __future__ import annotations
@@ -21,16 +21,9 @@ from __future__ import annotations
 import argparse
 import os
 import re
-import sys
 from collections import Counter
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))))
-
-
-def plan_of(df) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
+from flo_spark.plans.explain import explain_str
 
 
 def summarize(plan: str) -> dict:
@@ -54,25 +47,25 @@ def summarize(plan: str) -> dict:
     }
 
 
-def main() -> None:
-    ap = argparse.ArgumentParser()
+def main(argv: list[str] | None = None) -> None:
+    ap = argparse.ArgumentParser(prog="python -m flo_spark.plans.audit")
+    ap.add_argument("--out", required=True, help="directory for plan dumps")
     ap.add_argument("--sf", default="/root/testdata/sf0.001")
     ap.add_argument("--dump", nargs="*", default=[])
     ap.add_argument("--tag", default="before")
     ap.add_argument("--only", nargs="*", default=None)
-    args = ap.parse_args()
+    args = ap.parse_args(argv)
 
     from flo_spark.queries import queries
     from flo_spark.session import get_spark
 
-    spark = get_spark("r09_plan_audit")
+    spark = get_spark("plan_audit")
     qmap = queries()
     names = args.only if args.only else list(qmap)
-    out_dir = os.path.dirname(os.path.abspath(__file__))
+    os.makedirs(args.out, exist_ok=True)
     for name in names:
         try:
-            df = qmap[name](spark, args.sf)
-            plan = plan_of(df)
+            plan = explain_str(qmap[name](spark, args.sf))
             s = summarize(plan)
             print(
                 f"{name}\tmax_rescan={s['max_rescan']}\tscans={s['scans']}\t"
@@ -82,7 +75,8 @@ def main() -> None:
                 flush=True,
             )
             if name in args.dump:
-                with open(f"{out_dir}/{name}_{args.tag}.txt", "w") as fh:
+                path = os.path.join(args.out, f"{name}_{args.tag}.txt")
+                with open(path, "w") as fh:
                     fh.write(plan)
         except Exception as e:  # streaming entries etc.
             print(f"{name}\tERROR\t{type(e).__name__}: {e}", flush=True)

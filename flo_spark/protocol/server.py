@@ -25,11 +25,14 @@ Semantics ported (flo-server/src/engine/connection_handler):
   consume it is an InvalidConsumerState error (client.rs:261-262).
 
 Storage is the same on-disk layout every other reader in this engine
-uses (``<root>/<stream>/p<N>/<seg>.events``), so a dir populated over
-TCP is directly scannable by ``spark.read.format("flo")`` and vice
-versa.  The server is an operational sidecar for remote clients — the
-100 TB analytics path stays the distributed Spark scan; nothing here
-is on a query hot path.
+uses (``<root>/<stream>/p<N>/<seg>.events``), read through the same
+:class:`~flo_spark.sources.flo_segment.SegmentIndex`, so a dir
+populated over TCP is directly scannable by ``spark.read.format("flo")``
+and vice versa.  On start each stream rebuilds its heads from that
+index and cuts a torn record off the tail of each active segment: the
+append that tore was never acked.  The server is an operational
+sidecar for remote clients — the 100 TB analytics path stays the
+distributed Spark scan; nothing here is on a query hot path.
 """
 
 from __future__ import annotations
@@ -44,12 +47,7 @@ import time
 
 from flo_spark.functions.glob import GlobError, glob_to_regex, is_match_all
 from flo_spark.protocol import wire
-from flo_spark.sources.flo_segment import (
-    HEADER_LEN,
-    decode_segment,
-    encode_event,
-    list_segment_files,
-)
+from flo_spark.sources.flo_segment import HEADER_LEN, SegmentIndex, encode_event
 
 DEFAULT_BATCH_SIZE = 10_000  # connection_state.rs:11
 
@@ -71,28 +69,30 @@ class _Stream:
 
     def _recover(self) -> None:
         """Rebuild heads + active-segment fill from the dir — the same
-        one-pass recovery scan flo runs at startup (mmap.rs:111-134)."""
-        for d, entries in list_segment_files(self.path).items():
-            base = os.path.basename(d)
-            if not (base.startswith("p") and base[1:].isdigit()):
+        one-pass recovery scan flo runs at startup (mmap.rs:111-134).
+        A torn record at the tail of an active segment is an append
+        that crashed before its ack was sent, so it is cut off: appends
+        go to the end of the file, and would land behind it."""
+        index = SegmentIndex(self.path)
+        for d, segs in index.dirs.items():
+            part = index.dir_actor(d)
+            if part is None:
                 continue
-            part = int(base[1:])
-            head = 0
-            for _n, p in entries:
-                with open(p, "rb") as f:
-                    buf = f.read()
-                n = 0
-                for ev in decode_segment(buf):
-                    head = max(head, ev[0])
-                    n += 1
-            active = entries[-1][1]
-            self.parts[part] = [head, active, n, os.path.getsize(active)]
+            active = segs[-1]
+            n = head = 0
+            for ev in active.events():
+                n += 1
+                head = max(head, ev[0])
+            if n == 0:
+                head = max(index.heads(d).values(), default=0)
+            if os.path.getsize(active.path) != active.valid_len:
+                os.truncate(active.path, active.valid_len)
+            self.parts[part] = [head, active.path, n, active.valid_len]
 
     def _fresh_segment(self, part: int, now_ms: int) -> str:
         d = os.path.join(self.path, f"p{part}")
         os.makedirs(d, exist_ok=True)
-        nums = [n for n, _p in list_segment_files(d).get(d, []) if n >= 0]
-        seg = os.path.join(d, f"{(max(nums) + 1) if nums else 0}.events")
+        seg = os.path.join(d, f"{SegmentIndex(d).next_num(d)}.events")
         with open(seg, "wb") as f:
             f.write(struct.pack(">QQ", now_ms, now_ms))
         return seg
@@ -155,36 +155,19 @@ class _Stream:
         Files fully below the cursor prune on a header peek; a torn
         tail (an append racing this read) parks until the next poll —
         the recovery-scan rule."""
-        from flo_spark.sources.flo_datasource import _first_event_header
-
+        index = SegmentIndex(self.path)
         out = []
-        for d, entries in list_segment_files(self.path).items():
-            base = os.path.basename(d)
-            if not (base.startswith("p") and base[1:].isdigit()):
-                continue
-            part = int(base[1:])
+        for d in index.dirs:
+            part = index.dir_actor(d)
             if part not in vv:
                 continue
             floor = vv[part]
-            firsts = [_first_event_header(p) for _n, p in entries]
-            for i, (_n, p) in enumerate(entries):
-                nxt = firsts[i + 1] if i + 1 < len(entries) else None
-                if nxt is not None and nxt[0] - 1 <= floor:
-                    continue  # every counter in this file <= cursor
-                with open(p, "rb") as f:
-                    buf = f.read()
-                it = decode_segment(buf)
-                while True:
-                    try:
-                        ev = next(it)
-                    except StopIteration:
-                        break
-                    except ValueError:
-                        break  # torn in-flight append at the tail
-                    if ev[0] > floor and (
-                        ns_regex is None or ns_regex.match(ev[5])
-                    ):
-                        out.append(ev)
+            for seg in index.unread(d, vv, vv):
+                out.extend(
+                    ev
+                    for ev in seg.events()
+                    if ev[0] > floor and (ns_regex is None or ns_regex.match(ev[5]))
+                )
         out.sort(key=lambda e: (e[0], e[1]))
         return out
 

@@ -51,16 +51,22 @@ segment seals it and rotates (EventTooBig -> rotate -> append,
 segment/mod.rs:65-74); an event larger than the whole budget gets a
 segment of its own.
 
-Scale shape: the stream reader keeps a driver-side **segment index**
-— per sealed file, the (min, max) counter range per actor, built by
-decoding each sealed file exactly once (flo rebuilds its index the
-same way on recovery, mmap.rs:111-134) — so ``partitions(start,
-end)`` ships each executor only the files whose range overlaps its
-(start, end] slice: the index-seek analog (A5, index.rs:86-129).
-Only the ACTIVE (max-numbered) segment per dir is re-read per
-trigger, and a torn in-progress event at its tail parks until the
-next trigger instead of failing the batch (the reference's recovery
-scan stops at the first invalid record the same way).
+Scale shape: every reader plans from one
+:class:`~flo_spark.sources.flo_segment.SegmentIndex` — one walk of the
+dir and at most one 64-byte header read per file — and decodes through
+its one reader.  That reader stops at a record that does not decode in
+an ACTIVE (max-numbered) segment, an append in flight that completes
+by the next trigger, and raises on one in a sealed segment (the
+reference's recovery scan stops at the first invalid record the same
+way, mmap.rs:111-134).  The batch reader and
+the credit-flow reader skip the files a version vector has fully
+consumed (the index's first-counter rule).  On top of that the stream
+reader keeps a driver-side per-file index — for each sealed file, the
+(min, max) counter range per actor, built by decoding each sealed file
+exactly once — so ``partitions(start, end)`` ships each executor only
+the files whose range overlaps its (start, end] slice: the index-seek
+analog (A5, index.rs:86-129).  Only the active segments are re-read
+per trigger.
 """
 
 from __future__ import annotations
@@ -89,60 +95,12 @@ from pyspark.sql.datasource import (
 from flo_spark.functions.glob import glob_to_regex, is_match_all
 from flo_spark.schema import EVENT_SCHEMA
 from flo_spark.sources.flo_segment import (
-    EVENT_FIXED_LEN,
     HEADER_LEN,
-    MARKER,
     STAGING_DIRNAME,
-    _FIXED,
-    decode_segment,
+    SegmentFile,
+    SegmentIndex,
     encode_event,
-    list_segment_files as _list_segments,
-    split_sealed_active as _split_sealed_active,
 )
-
-
-def _first_event_header(path: str) -> tuple[int, int] | None:
-    """(counter, actor) of a segment's first event from one 48-byte
-    header read (used for file-level pruning; None for empty/headerless
-    files)."""
-    try:
-        with open(path, "rb") as f:
-            head = f.read(HEADER_LEN + EVENT_FIXED_LEN)
-    except OSError:
-        return None
-    if len(head) < HEADER_LEN + EVENT_FIXED_LEN:
-        return None
-    total_len, marker, actor, counter, *_rest = _FIXED.unpack_from(
-        head, HEADER_LEN
-    )
-    if marker != MARKER:
-        return None
-    return counter, actor
-
-
-def _first_event_counter(path: str) -> int | None:
-    got = _first_event_header(path)
-    return got[0] if got else None
-
-
-def _decode_file(path: str, tolerate_partial_tail: bool):
-    """Decode one segment file; with ``tolerate_partial_tail`` a torn
-    record at the end stops the scan instead of raising (an in-flight
-    append on a LIVE active segment — complete next trigger)."""
-    with open(path, "rb") as f:
-        buf = f.read()
-    it = decode_segment(buf)
-    if not tolerate_partial_tail:
-        yield from it
-        return
-    while True:
-        try:
-            ev = next(it)
-        except StopIteration:
-            return
-        except ValueError:
-            return  # torn tail of an in-progress append
-        yield ev
 
 
 #: Arrow schema mirroring EVENT_SCHEMA; readers yield RecordBatches,
@@ -209,7 +167,6 @@ class FloSegmentPartition(InputPartition):
     """Batch input split: one segment file (flo's storage unit)."""
 
     path: str
-    counter_gt: int  # global exclusive vv lower bound; -1 = none
 
 
 @dataclass
@@ -238,11 +195,9 @@ class FloBatchReader(DataSourceReader):
         # pushed by one plan would silently leak into a filterless
         # sibling plan (verified against 4.1: df.filter(c>10).count()
         # followed by df.count() returns the filtered count twice).
-        # The vv/namespace OPTIONS below give the same Python-side row
-        # reduction with per-load scoping; event_counter seek pruning
-        # lives in the stream reader's segment index, which is not
-        # plan-dependent.
-        self.counter_gt = -1 if self.vv is None else min(self.vv.values())
+        # The vv/namespace OPTIONS give the same Python-side row
+        # reduction with per-load scoping, and the vv prunes files
+        # through the SegmentIndex, which is not plan-dependent.
 
     def _keep(self, ev: tuple) -> bool:
         counter, actor = ev[0], ev[1]
@@ -254,28 +209,16 @@ class FloBatchReader(DataSourceReader):
         return True
 
     def partitions(self):
-        out = []
-        for _d, entries in _list_segments(self.root).items():
-            firsts = [_first_event_counter(p) for _n, p in entries]
-            for i, (_num, path) in enumerate(entries):
-                if self.counter_gt >= 0:
-                    # within a partition dir counters only grow across
-                    # rotations, so a file is prunable when the NEXT
-                    # file starts at-or-below min(vv) — every event in it
-                    # fails its own actor's exclusive vv bound
-                    nxt = firsts[i + 1] if i + 1 < len(entries) else None
-                    if nxt is not None and nxt <= self.counter_gt:
-                        continue
-                out.append(FloSegmentPartition(path, self.counter_gt))
-        return out
+        index = SegmentIndex(self.root)
+        return [
+            FloSegmentPartition(seg.path)
+            for d in index.dirs
+            for seg in index.unread(d, self.vv, self.vv)
+        ]
 
     def read(self, partition: FloSegmentPartition):
         yield from _to_batches(
-            ev
-            for ev in _decode_file(
-                partition.path, tolerate_partial_tail=False
-            )
-            if self._keep(ev)
+            ev for ev in SegmentFile(partition.path).events() if self._keep(ev)
         )
 
 
@@ -342,10 +285,10 @@ class FloStreamReader(DataSourceStreamReader):
     NS_INDEX_CAP = 64
 
     # -- index maintenance (driver-side, each sealed file decoded once)
-    def _scan_file(self, path: str, tolerant: bool) -> dict:
+    def _scan_file(self, seg: SegmentFile) -> dict:
         rng: dict[int, tuple[int, int]] = {}
         namespaces: set | None = set()
-        for ev in _decode_file(path, tolerate_partial_tail=tolerant):
+        for ev in seg.events():
             counter, actor = ev[0], ev[1]
             lo, hi = rng.get(actor, (counter, counter))
             rng[actor] = (min(lo, counter), max(hi, counter))
@@ -358,15 +301,16 @@ class FloStreamReader(DataSourceStreamReader):
             "ns": sorted(namespaces) if namespaces is not None else None,
         }
 
-    def _refresh_index(self) -> dict[str, dict]:
-        """Update the sealed index; return the ACTIVE files' live
-        entries (recomputed every trigger — the only per-trigger decode,
-        bounded by one segment per partition dir)."""
-        sealed, active = _split_sealed_active(self.root)
+    def _refresh_index(self) -> SegmentIndex:
+        """Bring the sealed-file index up to date with the dir; return
+        the dir's SegmentIndex.  Active files are never indexed: they
+        still grow."""
+        index = SegmentIndex(self.root)
+        sealed = {seg.path: seg for seg in index.files() if not seg.active}
         dirty = False
-        for path in sealed:
+        for path, seg in sealed.items():
             if path not in self._index:
-                self._index[path] = self._scan_file(path, tolerant=False)
+                self._index[path] = self._scan_file(seg)
                 dirty = True
         for stale in set(self._index) - set(sealed):
             del self._index[stale]  # expired by the TTL job
@@ -391,7 +335,7 @@ class FloStreamReader(DataSourceStreamReader):
                     f,
                 )
             os.replace(tmp, self._indexfile)
-        return {p: self._scan_file(p, tolerant=True) for p in active}
+        return index
 
     def initialOffset(self) -> dict:
         if self.start_vv is not None:
@@ -399,9 +343,12 @@ class FloStreamReader(DataSourceStreamReader):
         return {}
 
     def latestOffset(self) -> dict:
-        active_entries = self._refresh_index()
+        index = self._refresh_index()
+        # active files are re-read every trigger — the only per-trigger
+        # decode, bounded by one segment per partition dir
+        active = [self._scan_file(seg) for seg in index.files() if seg.active]
         heads: dict[int, int] = {}
-        for entry in list(self._index.values()) + list(active_entries.values()):
+        for entry in list(self._index.values()) + active:
             for actor, (_lo, hi) in entry["actors"].items():
                 if self.pinned is not None and actor not in self.pinned:
                     continue
@@ -418,10 +365,10 @@ class FloStreamReader(DataSourceStreamReader):
         # uncommitted (start, end] batch through partitions() without
         # calling latestOffset, and the rebuilt index must already
         # cover those files or the replay would drop events
-        self._refresh_index()
-        sealed, active = _split_sealed_active(self.root)
-        active_set = frozenset(active)
+        index = self._refresh_index()
+        sealed = [seg.path for seg in index.files() if not seg.active]
         # active files have no persistent index entry; always candidates
+        active = tuple(sorted(seg.path for seg in index.files() if seg.active))
         out = []
         for key, end_c in end.items():
             actor = int(key)
@@ -451,7 +398,7 @@ class FloStreamReader(DataSourceStreamReader):
             out.append(
                 FloStreamPartition(
                     files=tuple(sorted(files)),
-                    active_files=tuple(sorted(active_set)),
+                    active_files=active,
                     actor=actor,
                     start=start_c,
                     end=end_c,
@@ -462,8 +409,8 @@ class FloStreamReader(DataSourceStreamReader):
     def read(self, partition: FloStreamPartition):
         def slice_events():
             for path in partition.files + partition.active_files:
-                tolerant = path in partition.active_files
-                for ev in _decode_file(path, tolerate_partial_tail=tolerant):
+                seg = SegmentFile(path, active=path in partition.active_files)
+                for ev in seg.events():
                     counter, actor = ev[0], ev[1]
                     if actor != partition.actor:
                         continue
@@ -522,82 +469,28 @@ class FloCreditStreamReader(SimpleDataSourceStreamReader):
             return {str(a): int(c) for a, c in self.start_vv.items()}
         return {}
 
-    def _dir_floor(self, dir_actors: set[int] | None, start: dict) -> int:
-        """Exclusive prune floor for one partition dir: the min cursor
-        over the actors that can appear in it.
-
-        An actor ABSENT from ``start`` has an implicit cursor of 0, so
-        a floor taken over start.values() alone silently drops a new
-        actor's sealed history (its files prune against another actor's
-        high cursor, then read() advances the new actor's offset past
-        the lost events — permanent loss).  Hence:
-
-        - known single-actor dir (``p<N>`` writer layout, confirmed by
-          the first-event headers): that actor's own cursor;
-        - pinned consumer: min over the pinned cursors (non-pinned
-          actors are filtered out anyway, so they can't lose events);
-        - otherwise: 0 — no pruning, any unknown actor may appear.
-        """
-        if dir_actors is not None:
-            return min(int(start.get(str(a), 0)) for a in dir_actors)
-        if self.pinned is not None:
-            return min(int(start.get(str(a), 0)) for a in self.pinned)
-        return 0
-
-    @staticmethod
-    def _known_dir_actors(d: str, firsts: list) -> set[int] | None:
-        """{actor} when the dir is provably single-actor: named
-        ``p<N>`` (the FloWriter layout contract — one actor per
-        partition dir) AND every readable first-event header agrees;
-        None otherwise."""
-        m = re.fullmatch(r"p(\d+)", os.path.basename(d))
-        if not m:
-            return None
-        actor = int(m.group(1))
-        if any(h is not None and h[1] != actor for h in firsts):
-            return None
-        return {actor}
-
     def _dir_streams(self, start: dict):
         """One LAZY generator per partition dir, yielding that dir's
         events with counter > start[actor] in id order.  Files decode
         one at a time, only when the merge actually pulls on them, so
         driver memory is O(one segment per dir + the heap) rather than
         O(whole backlog) — and a budget-exhausted read() never opens
-        the files behind it.  In-order yield is safe because counters
-        within a partition dir only grow across rotations (same
-        invariant the batch reader's pruning uses); within one file we
-        sort defensively (file-sized, bounded)."""
+        the files behind it.  ``SegmentIndex.unread`` drops the files
+        the cursor has fully consumed; counters only grow across a
+        dir's rotations, so in-order yield is safe, and within one file
+        we sort defensively (file-sized, bounded)."""
+        cursor = {int(a): int(c) for a, c in start.items()}
+        index = SegmentIndex(self.root)
         streams = []
-        for d, entries in _list_segments(self.root).items():
-            firsts = [_first_event_header(p) for _n, p in entries]
-            dir_actors = self._known_dir_actors(d, firsts)
-            if (
-                self.pinned is not None
-                and dir_actors is not None
-                and not (dir_actors & self.pinned)
-            ):
-                continue  # single-actor dir for an unpinned actor
-            floor = self._dir_floor(dir_actors, start)
+        for d in index.dirs:
 
-            def gen(entries=entries, firsts=firsts, floor=floor):
-                for i, (_num, path) in enumerate(entries):
-                    nxt = firsts[i + 1] if i + 1 < len(entries) else None
-                    # every counter in file i is < the next file's first
-                    # counter, so the file is fully consumed exactly
-                    # when nxt-1 <= floor
-                    if nxt is not None and nxt[0] - 1 <= floor:
-                        continue
-                    is_active = i == len(entries) - 1
-                    evs = sorted(
-                        _decode_file(path, tolerate_partial_tail=is_active),
-                        key=lambda e: (e[0], e[1]),
-                    )
-                    for ev in evs:
+            def gen(segs=index.unread(d, cursor, self.pinned)):
+                for seg in segs:
+                    for ev in sorted(seg.events(), key=lambda e: (e[0], e[1])):
                         actor = ev[1]
                         if self.pinned is not None and actor not in self.pinned:
                             continue
-                        if ev[0] > int(start.get(str(actor), 0)):
+                        if ev[0] > cursor.get(actor, 0):
                             yield ev
 
             streams.append(gen())
@@ -813,40 +706,35 @@ class FloWriter(DataSourceArrowWriter, DataSourceStreamArrowWriter):
         return out
 
     def _commit_files(self, staged: list[tuple[str, int, int]]) -> None:
+        # the index skips _staging, so an overwrite removes only
+        # COMMITTED segments — never the files this very commit is
+        # about to rename into place (a staging-inclusive walk here
+        # used to delete both old data and the new staged files, then
+        # fail the rename: data loss with nothing written)
+        index = SegmentIndex(self.root)
         if self.overwrite:
-            # _list_segments prunes _staging, so this removes only
-            # COMMITTED segments — never the files this very commit is
-            # about to rename into place (a staging-inclusive walk here
-            # used to delete both old data and the new staged files,
-            # then fail the rename: data loss with nothing written)
-            for _d, entries in _list_segments(self.root).items():
-                for _n, p in entries:
-                    os.remove(p)
+            for seg in index.files():
+                os.remove(seg.path)
+            index.dirs.clear()
             self.overwrite = False
         self._gc_stale_staged(keep={p for p, _a, _n in staged})
         next_num: dict[str, int] = {}
+
         # commit per actor in FIRST-EVENT-COUNTER order (one header read
         # per staged file), so rotated segments land with counters
         # growing across segment numbers — the within-dir monotonicity
         # every reader's file pruning relies on.  uuid path order is
         # random and would interleave them.
         def _key(t):
-            got = _first_event_header(t[0])
-            return (t[1], got[0] if got else -1, t[0])
+            first = SegmentFile(t[0]).first
+            return (t[1], first[0] if first else -1, t[0])
 
         for path, actor, _n in sorted(staged, key=_key):
             d = os.path.join(self.root, f"p{actor}")
             os.makedirs(d, exist_ok=True)
             if d not in next_num:
-                nums = [
-                    n
-                    for n, _p in _list_segments(d).get(d, [])
-                    if n >= 0
-                ]
-                next_num[d] = max(nums) + 1 if nums else 0
-            os.replace(
-                path, os.path.join(d, f"{next_num[d]}.events")
-            )
+                next_num[d] = index.next_num(d)
+            os.replace(path, os.path.join(d, f"{next_num[d]}.events"))
             next_num[d] += 1
 
     def _drop_staged(self, staged) -> None:
@@ -942,9 +830,5 @@ class FloDataSource(DataSource):
 
 
 def register(spark) -> None:
-    """Idempotent registration of the "flo" format.  Also enables
-    Python-data-source filter pushdown (runtime conf, default false in
-    Spark 4.1) — without it Spark refuses to initialize any reader
-    that implements ``pushFilters``."""
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
+    """Idempotent registration of the "flo" format."""
     spark.dataSource.register(FloDataSource)

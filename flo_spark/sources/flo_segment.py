@@ -40,8 +40,10 @@ from __future__ import annotations
 
 import io
 import os
+import re
 import struct
-from collections.abc import Iterator
+from collections.abc import Collection, Iterator
+from functools import cached_property
 
 import pandas as pd
 
@@ -119,10 +121,21 @@ def segment_header(buf: bytes) -> tuple[int, int]:
     return struct.unpack_from(">QQ", buf, 0)
 
 
+class CorruptRecord(ValueError):
+    """A record that does not decode.  ``offset`` is where it starts,
+    which is also the end of the last whole event before it."""
+
+    def __init__(self, what: str, offset: int):
+        super().__init__(f"{what} at offset {offset}")
+        self.offset = offset
+
+
 def decode_segment(buf: bytes) -> Iterator[tuple]:
     """Yield ``(event_counter, actor, parent_counter, parent_actor,
     ts_millis, namespace, data)`` for each event; stop at the
-    zero-filled pre-allocation tail; raise on corruption.
+    zero-filled pre-allocation tail; raise :class:`CorruptRecord` on
+    corruption.  The generator's return value is the byte offset where
+    decoding stopped (the end of the last whole event).
 
     Mirrors PersistentEvent::validate (persistent_event.rs:69-103):
     length/marker check, then ns/data length cross-check against
@@ -142,18 +155,21 @@ def decode_segment(buf: bytes) -> Iterator[tuple]:
         ) = _FIXED.unpack_from(buf, pos)
         if marker != MARKER:
             if total_len == 0 and marker == b"\x00" * 8:
-                return  # zero-filled tail of a pre-allocated segment
-            raise ValueError(f"invalid marker bytes at offset {pos}")
+                return pos  # zero-filled tail of a pre-allocated segment
+            raise CorruptRecord("invalid marker bytes", pos)
         if pos + EVENT_FIXED_LEN + ns_len > n:
-            raise ValueError(f"namespace length too large at offset {pos}")
+            raise CorruptRecord("namespace length too large", pos)
         ns_start = pos + 44
-        namespace = buf[ns_start : ns_start + ns_len].decode("utf-8")
+        try:
+            namespace = buf[ns_start : ns_start + ns_len].decode("utf-8")
+        except UnicodeDecodeError:
+            raise CorruptRecord("invalid namespace utf-8", pos) from None
         (data_len,) = struct.unpack_from(">I", buf, ns_start + ns_len)
         if total_len != EVENT_FIXED_LEN + ns_len + data_len:
-            raise ValueError(f"mismatched lengths at offset {pos}")
+            raise CorruptRecord("mismatched lengths", pos)
         data_start = ns_start + ns_len + 4
         if data_start + data_len > n:
-            raise ValueError(f"data length too large at offset {pos}")
+            raise CorruptRecord("data length too large", pos)
         data = bytes(buf[data_start : data_start + data_len])
         yield (
             counter,
@@ -165,6 +181,7 @@ def decode_segment(buf: bytes) -> Iterator[tuple]:
             data,
         )
         pos += total_len
+    return pos
 
 
 #: the flo Data Source writer stages uncommitted segments here; every
@@ -175,11 +192,10 @@ STAGING_DIRNAME = "_staging"
 
 def list_segment_files(root: str) -> dict[str, list[tuple[int, str]]]:
     """``{dir: [(segment_num, path), ...] sorted by number}`` for every
-    ``.events`` file under ``root`` — the ONE shared walk used by all
-    readers and maintenance ops.  ``_staging`` subtrees (the writer's
-    two-phase-commit scratch space) are pruned: a file there is either
-    mid-write, a retried task's abandoned loser, or a crash leftover —
-    never data."""
+    ``.events`` file under ``root`` — the walk :class:`SegmentIndex` is
+    built from.  ``_staging`` subtrees (the writer's two-phase-commit
+    scratch space) are pruned: a file there is either mid-write, a
+    retried task's abandoned loser, or a crash leftover — never data."""
     by_dir: dict[str, list[tuple[int, str]]] = {}
     for r, dirs, files in os.walk(root):
         dirs[:] = [d for d in dirs if d != STAGING_DIRNAME]
@@ -196,16 +212,167 @@ def list_segment_files(root: str) -> dict[str, list[tuple[int, str]]]:
     return by_dir
 
 
-def split_sealed_active(root: str) -> tuple[list[str], list[str]]:
-    """Sealed vs active segment paths.  A rotated segment is never
-    written again (segment/mod.rs:65-74), so every file except the
-    max-numbered one per dir is immutable."""
-    sealed: list[str] = []
-    active: list[str] = []
-    for entries in list_segment_files(root).values():
-        sealed.extend(p for _n, p in entries[:-1])
-        active.append(entries[-1][1])
-    return sealed, active
+class SegmentFile:
+    """One ``.events`` file: its number, whether it is its dir's
+    ACTIVE (max-numbered) segment, and the two headers at its start.
+
+    ``events()`` is the one reader of the native format.  A rotated
+    segment is never written again (segment/mod.rs:65-74), so a record
+    that does not decode is tolerated only in the active segment, where
+    it is an append in flight: the scan stops there, like flo's
+    recovery scan (mmap.rs:111-134).  Anywhere else it raises.  After a
+    full scan ``valid_len`` is the byte length of the header plus every
+    whole event, and ``torn`` holds the tolerated error, if any."""
+
+    def __init__(self, path: str, num: int = -1, active: bool = False):
+        self.path = path
+        self.num = num
+        self.active = active
+        self.valid_len: int | None = None
+        self.torn: CorruptRecord | None = None
+
+    @cached_property
+    def _head(self) -> bytes:
+        """The 16-byte segment header and the first event's 48-byte
+        envelope, from one read (empty when unreadable)."""
+        try:
+            with open(self.path, "rb") as f:
+                return f.read(HEADER_LEN + EVENT_FIXED_LEN)
+        except OSError:
+            return b""
+
+    @property
+    def header(self) -> tuple[int, int] | None:
+        """(create_millis, end_millis), or None for a short file."""
+        head = self._head
+        return segment_header(head) if len(head) >= HEADER_LEN else None
+
+    @property
+    def first(self) -> tuple[int, int] | None:
+        """(counter, actor) of the first event, or None when the file
+        holds no whole first envelope."""
+        head = self._head
+        if len(head) < HEADER_LEN + EVENT_FIXED_LEN:
+            return None
+        _len, marker, actor, counter, *_rest = _FIXED.unpack_from(
+            head, HEADER_LEN
+        )
+        return (counter, actor) if marker == MARKER else None
+
+    def events(self) -> Iterator[tuple]:
+        with open(self.path, "rb") as f:
+            buf = f.read()
+        self.torn = None
+        try:
+            self.valid_len = yield from decode_segment(buf)
+        except CorruptRecord as err:
+            if not self.active:
+                raise
+            self.torn, self.valid_len = err, err.offset
+
+
+class SegmentIndex:
+    """Every segment file under ``root``, per dir, in segment-number
+    order — one :func:`list_segment_files` walk, plus at most one
+    64-byte header read per file, made only when a rule needs it.
+
+    It holds the rules every reader of the native format shares:
+
+    - a dir named ``p<N>`` belongs to actor N (the server and writer
+      layout), and is known single-actor when every first event agrees;
+    - the max-numbered file of a dir is active, the rest are sealed;
+    - counters only grow across a dir's segment numbers, so file *i*
+      holds nothing past a cursor ``floor`` when the next file's first
+      counter minus one is ``<= floor`` (the index-seek analog, A5,
+      index.rs:86-129);
+    - a new segment takes the dir's max number plus one.
+    """
+
+    def __init__(self, root: str):
+        self.dirs: dict[str, list[SegmentFile]] = {
+            d: [
+                SegmentFile(p, n, i == len(entries) - 1)
+                for i, (n, p) in enumerate(entries)
+            ]
+            for d, entries in sorted(list_segment_files(root).items())
+        }
+
+    def files(self) -> Iterator[SegmentFile]:
+        """Every file, in (dir, segment number) order."""
+        for segs in self.dirs.values():
+            yield from segs
+
+    @staticmethod
+    def dir_actor(d: str) -> int | None:
+        """N for a dir named ``p<N>``, else None."""
+        m = re.fullmatch(r"p([0-9]+)", os.path.basename(d))
+        return int(m.group(1)) if m else None
+
+    def known_actor(self, d: str) -> int | None:
+        """N when dir ``d`` is named ``p<N>`` (the writer's layout
+        contract, one actor per partition dir) AND every readable
+        first event agrees; None otherwise."""
+        actor = self.dir_actor(d)
+        if actor is None or any(
+            s.first is not None and s.first[1] != actor for s in self.dirs[d]
+        ):
+            return None
+        return actor
+
+    def unread(
+        self,
+        d: str,
+        cursor: dict[int, int] | None = None,
+        pinned: Collection[int] | None = None,
+    ) -> list[SegmentFile]:
+        """The files of dir ``d`` that can hold an event past
+        ``cursor`` (``{actor: last delivered counter}``; None keeps
+        every file).  ``pinned`` limits the consumer to those actors.
+
+        The dir's floor is the least cursor over the actors that can
+        appear in it.  An actor absent from the cursor counts as 0, so
+        a new actor's history never prunes against another actor's
+        high cursor.  Hence: a known single-actor dir uses its own
+        actor's cursor, and is skipped when that actor is not pinned;
+        an unknown dir uses the least pinned cursor, or 0 when nothing
+        is pinned."""
+        segs = self.dirs[d]
+        if cursor is None:
+            return list(segs)
+        actor = self.known_actor(d)
+        if actor is None:
+            floor = min((cursor.get(a, 0) for a in pinned or ()), default=0)
+        elif pinned is not None and actor not in pinned:
+            return []
+        else:
+            floor = cursor.get(actor, 0)
+        return [
+            s
+            for s, nxt in zip(segs, segs[1:] + [None])
+            if nxt is None or nxt.first is None or nxt.first[0] - 1 > floor
+        ]
+
+    def heads(self, d: str, full_scan: bool = False) -> dict[int, int]:
+        """{actor: max counter} in dir ``d``.  Without ``full_scan`` the
+        files are read newest first until one yields events (flo
+        fast-forwards its counter from the tail the same way,
+        controller/mod.rs:64-66) — exact for a one-actor dir."""
+        heads: dict[int, int] = {}
+        segs = self.dirs[d]
+        for seg in segs if full_scan else reversed(segs):
+            found = False
+            for ev in seg.events():
+                found = True
+                if ev[0] > heads.get(ev[1], 0):
+                    heads[ev[1]] = ev[0]
+            if found and not full_scan:
+                break
+        return heads
+
+    def next_num(self, d: str) -> int:
+        """The number a new segment in dir ``d`` takes."""
+        nums = [s.num for s in self.dirs.get(d, []) if s.num >= 0]
+        return max(nums) + 1 if nums else 0
 
 
 _WRITE_REPORT_SCHEMA = T.StructType(
@@ -499,11 +666,6 @@ class NativeDirTailer:
             with open(checkpoint_file) as f:
                 self._processed = set(json.load(f))
 
-    def _segments(self) -> tuple[list[str], list[str]]:
-        """(sealed, active) segment file paths, active = max-numbered
-        per directory (shared walk; skips writer ``_staging`` dirs)."""
-        return split_sealed_active(self.path)
-
     def poll_once(self, include_active: bool = False) -> int:
         """Process newly sealed segments (plus active ones when
         ``include_active``); returns the number of events delivered."""
@@ -512,21 +674,17 @@ class NativeDirTailer:
             version_vector_filter,
         )
 
-        sealed, active = self._segments()
-        todo = [p for p in sealed if p not in self._processed]
-        if include_active:
-            todo += [p for p in active if p not in self._processed]
+        todo = [
+            seg.path
+            for seg in SegmentIndex(self.path).files()
+            if (include_active or not seg.active)
+            and seg.path not in self._processed
+        ]
         if not todo:
             self.backlog = 0
             return 0
         # bounded sweep in (dir, segment number) order; remainder
         # carries to the next sweep
-        todo.sort(
-            key=lambda p: (
-                os.path.dirname(p),
-                int(os.path.basename(p)[: -len(".events")]),
-            )
-        )
         self.backlog = max(0, len(todo) - self.max_segments_per_sweep)
         todo = todo[: self.max_segments_per_sweep]
         df = (
@@ -586,36 +744,29 @@ def expire_native_segments(
     controller/mod.rs:158-178): per partition dir, delete the
     CONTIGUOUS PREFIX of sealed segments whose header end-time is
     older than ``now - retention`` — whole-file drops costing one
-    16-byte header read each (never a per-event delete), stopping at
+    header read each (never a per-event delete), stopping at
     the first unexpired segment exactly like the reference's
     take_while (the comparison there reads inverted as written; the
     embedded TTL test and our parquet ``EventStream.expire_old_events``
     pin the drop-expired-prefix intent this follows).  The ACTIVE
     (max-numbered) segment never expires — the reference's writer
     always keeps it."""
-    import struct as _struct
     import time as _time
 
     if now_millis is None:
         now_millis = int(_time.time() * 1000)
     cutoff = now_millis - retention_millis
     report = {"files_deleted": 0, "files_kept": 0, "events_dropped": 0}
-    for entries in list_segment_files(root).values():
-        for i, (_num, path) in enumerate(entries):
-            is_active = i == len(entries) - 1
-            with open(path, "rb") as f:
-                head = f.read(HEADER_LEN)
-            if is_active or len(head) < HEADER_LEN:
+    for segs in SegmentIndex(root).dirs.values():
+        for i, seg in enumerate(segs):
+            if seg.active or seg.header is None:
                 report["files_kept"] += 1
                 break
-            _create, end = _struct.unpack(">QQ", head)
-            if end >= cutoff:
-                report["files_kept"] += len(entries) - i
+            if seg.header[1] >= cutoff:
+                report["files_kept"] += len(segs) - i
                 break  # take_while: stop at the first unexpired
-            report["events_dropped"] += sum(
-                1 for _ in decode_segment(open(path, "rb").read())
-            )
-            os.remove(path)
+            report["events_dropped"] += sum(1 for _ in seg.events())
+            os.remove(seg.path)
             report["files_deleted"] += 1
     return report
 
@@ -626,32 +777,16 @@ def native_head_status(root: str, full_scan: bool = False) -> list[tuple]:
     ``[(partition, head_counter, primary), ...]`` sorted by partition.
 
     The cheap path decodes only each dir's TAIL segments, newest
-    first, until one yields events (the reference fast-forwards its
-    counter from the tail the same way, controller/mod.rs:64-66) —
-    exact for flo's one-actor-per-dir layout.  For mixed-actor dirs
-    pass ``full_scan=True`` to fold every segment.  ``primary`` is
+    first, until one yields events (``SegmentIndex.heads``) — exact
+    for flo's one-actor-per-dir layout.  For mixed-actor dirs pass
+    ``full_scan=True`` to fold every segment.  ``primary`` is
     constantly true: the embedded/single-engine deployment owns every
     partition it reads (client.rs:207-221; clustering is vestigial)."""
+    index = SegmentIndex(root)
     heads: dict[int, int] = {}
-    for entries in list_segment_files(root).values():
-        paths = [p for _n, p in entries]
-        scan = paths if full_scan else reversed(paths)
-        for path in scan:
-            found = False
-            buf = open(path, "rb").read()
-            it = decode_segment(buf)
-            while True:
-                try:
-                    ev = next(it)
-                except StopIteration:
-                    break
-                except ValueError:
-                    break  # torn active tail
-                found = True
-                if ev[0] > heads.get(ev[1], 0):
-                    heads[ev[1]] = ev[0]
-            if found and not full_scan:
-                break
+    for d in index.dirs:
+        for actor, head in index.heads(d, full_scan).items():
+            heads[actor] = max(heads.get(actor, 0), head)
     return [(a, heads[a], True) for a in sorted(heads)]
 
 
@@ -675,8 +810,6 @@ def fsck_native_dir(root: str) -> dict:
     torn_active: [...], heads: {actor: head}}`` — empty errors ==
     healthy.  Pure driver-side sequential scan: fsck is an admin
     command, not a query path."""
-    import struct as _struct
-
     report = {
         "files_ok": 0,
         "n_events": 0,
@@ -685,58 +818,46 @@ def fsck_native_dir(root: str) -> dict:
         "torn_active": [],
         "heads": {},
     }
-    for d, entries in list_segment_files(root).items():
+    heads = report["heads"]
+    for segs in SegmentIndex(root).dirs.values():
         prev_max = None
-        for i, (_num, path) in enumerate(entries):
-            is_active = i == len(entries) - 1
-            try:
-                with open(path, "rb") as f:
-                    buf = f.read()
-            except OSError as err:
-                report["errors"].append(f"{path}: unreadable: {err}")
+        for seg in segs:
+            path = seg.path
+            if seg.header is None:
+                report["errors"].append(f"{path}: short or unreadable header")
                 continue
-            if len(buf) < HEADER_LEN:
-                report["errors"].append(f"{path}: short header ({len(buf)}B)")
-                continue
-            create_ms, end_ms = _struct.unpack(">QQ", buf[:HEADER_LEN])
+            create_ms, end_ms = seg.header
             if end_ms < create_ms:
                 report["warnings"].append(
                     f"{path}: header end-time precedes create-time"
                 )
-            n, file_min, file_max, max_ts, torn = 0, None, None, None, None
-            it = decode_segment(buf)
-            while True:
-                try:
-                    ev = next(it)
-                except StopIteration:
-                    break
-                except ValueError as err:
-                    torn = str(err)
-                    break
-                n += 1
-                file_min = ev[0] if file_min is None else min(file_min, ev[0])
-                file_max = ev[0] if file_max is None else max(file_max, ev[0])
-                max_ts = ev[4] if max_ts is None else max(max_ts, ev[4])
-                report["heads"][ev[1]] = max(report["heads"].get(ev[1], 0), ev[0])
-            report["n_events"] += n
-            if torn is not None:
-                if is_active:
-                    report["torn_active"].append(f"{path}: {torn}")
-                else:
-                    report["errors"].append(f"{path}: sealed file torn: {torn}")
-                    continue
+            n, lo, hi, max_ts = 0, None, None, None
+            try:
+                for ev in seg.events():
+                    n += 1
+                    lo = ev[0] if lo is None else min(lo, ev[0])
+                    hi = ev[0] if hi is None else max(hi, ev[0])
+                    max_ts = ev[4] if max_ts is None else max(max_ts, ev[4])
+                    heads[ev[1]] = max(heads.get(ev[1], 0), ev[0])
+            except CorruptRecord as err:
+                report["errors"].append(f"{path}: sealed file torn: {err}")
+                continue
+            finally:
+                report["n_events"] += n
+            if seg.torn is not None:
+                report["torn_active"].append(f"{path}: {seg.torn}")
             if max_ts is not None and end_ms < max_ts:
                 report["warnings"].append(
                     f"{path}: header end-time {end_ms} < last event "
                     f"timestamp {max_ts} (TTL could expire live data)"
                 )
-            if prev_max is not None and file_min is not None and file_min <= prev_max:
+            if prev_max is not None and lo is not None and lo <= prev_max:
                 report["warnings"].append(
-                    f"{path}: first counter {file_min} <= previous "
+                    f"{path}: first counter {lo} <= previous "
                     f"segment's max {prev_max} — within-dir monotonicity "
                     "broken; file pruning will be conservative"
                 )
-            if file_max is not None:
-                prev_max = file_max
+            if hi is not None:
+                prev_max = hi
             report["files_ok"] += 1
     return report

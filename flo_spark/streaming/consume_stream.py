@@ -33,7 +33,6 @@ import uuid
 from collections.abc import Mapping
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from flo_spark.operators.consume import (
     namespace_filter,
@@ -358,50 +357,6 @@ def consume_tail_ordered(
         query.stop()
         raise TimeoutError(f"ordered drain did not finish within {timeout_sec}s")
     return _handle(query)
-
-
-def windowed_counts(
-    events: DataFrame,
-    ts_col: str = "timestamp",
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-    keys: list[str] | None = None,
-) -> DataFrame:
-    """Event-time tumbling-window aggregation with a watermark for late
-    data — the B-streaming extension (NOT a flo port: flo orders by
-    counter and disclaims timestamp monotonicity, lib.rs:51-53)."""
-    keys = keys or []
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window).alias("w"), *keys)
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            *keys,
-            "n_events",
-        )
-    )
-
-
-def sessionized_counts(
-    events: DataFrame,
-    ts_col: str = "timestamp",
-    gap: str = "30 minutes",
-    key: str = "namespace",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Session windows (gap-based) per key."""
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.session_window(F.col(ts_col), gap).alias("w"), F.col(key))
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
-            key,
-            "n_events",
-        )
-    )
 
 
 def streaming_dedup(

@@ -658,6 +658,7 @@ def test_credit_flow_decode_is_lazy_up_to_budget(spark, tmp_path, monkeypatch):
     implementation buffered and re-decoded every unconsumed event each
     trigger)."""
     from flo_spark.sources import flo_datasource as mod
+    from flo_spark.sources.flo_segment import SegmentFile
 
     root = tmp_path / "lazy"
     d = root / "p1"
@@ -668,13 +669,13 @@ def test_credit_flow_decode_is_lazy_up_to_budget(spark, tmp_path, monkeypatch):
         )
 
     opened = []
-    real = mod._decode_file
+    real = SegmentFile.events
 
-    def spy(path, tolerate_partial_tail):
-        opened.append(os.path.basename(path))
-        return real(path, tolerate_partial_tail)
+    def spy(self):
+        opened.append(os.path.basename(self.path))
+        return real(self)
 
-    monkeypatch.setattr(mod, "_decode_file", spy)
+    monkeypatch.setattr(SegmentFile, "events", spy)
     r = mod.FloCreditStreamReader({"path": str(root), "batchsize": "5"})
     rows, cursor = r.read(r.initialOffset())
     assert [x[0] for x in rows] == [1, 2, 3, 4, 5]
@@ -782,11 +783,9 @@ def test_writer_maxbytes_rotation_with_oversized_events(spark, tmp_path):
     )
     assert len(segs) >= 4  # three 1 MiB events force rotations
     # counters grow across segment numbers (within-dir monotonicity)
-    from flo_spark.sources.flo_datasource import _first_event_header
+    from flo_spark.sources.flo_segment import SegmentFile
 
-    firsts = [
-        _first_event_header(os.path.join(d, f"{n}.events"))[0] for n in segs
-    ]
+    firsts = [SegmentFile(os.path.join(d, f"{n}.events")).first[0] for n in segs]
     assert firsts == sorted(firsts)
     back = spark.read.format("flo").load(out)
 

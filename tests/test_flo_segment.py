@@ -583,6 +583,57 @@ def test_expire_native_segments_drops_expired_prefix(tmp_path):
     ]
 
 
+def test_segment_index_reader_tolerates_tears_only_in_active(tmp_path):
+    """The index's one reader: a torn record ends the scan of a dir's
+    active segment, with ``valid_len`` at the end of the last whole
+    event, and raises in a sealed one."""
+    from flo_spark.sources.flo_segment import CorruptRecord, SegmentIndex
+
+    d = tmp_path / "p1"
+    d.mkdir()
+    whole = encode_segment(
+        iter([(c, 1, None, None, 0, "/i", b"x") for c in (1, 2)]), 0, 0
+    )
+    torn = whole + encode_event(3, 1, None, None, 0, "/i", b"x")[:-2]
+    (d / "0.events").write_bytes(torn)
+    (d / "1.events").write_bytes(torn)
+    sealed, active = SegmentIndex(str(tmp_path)).dirs[str(d)]
+    assert (sealed.active, active.active) == (False, True)
+    assert [ev[0] for ev in active.events()] == [1, 2]
+    assert active.valid_len == len(whole) and active.torn is not None
+    with pytest.raises(CorruptRecord, match=f"at offset {len(whole)}"):
+        list(sealed.events())
+
+
+def test_segment_index_unread_prunes_by_dir_floor(tmp_path):
+    """A file is skipped once the next file's first counter shows the
+    cursor consumed it; known p<N> dirs use their own actor's cursor
+    (and drop out when not pinned), other dirs the least pinned one."""
+    from flo_spark.sources.flo_segment import SegmentIndex
+
+    for name, actor in (("p1", 1), ("p2", 2), ("mixed", 1)):
+        d = tmp_path / name
+        d.mkdir()
+        for s in range(3):
+            evs = [(s * 10 + i + 1, actor, None, None, 0, "/u", b"") for i in range(10)]
+            (d / f"{s}.events").write_bytes(encode_segment(iter(evs), 0, 0))
+    index = SegmentIndex(str(tmp_path))
+
+    def nums(name, cursor, pinned=None):
+        return [s.num for s in index.unread(str(tmp_path / name), cursor, pinned)]
+
+    assert nums("p1", None) == [0, 1, 2]
+    assert nums("p1", {1: 10}) == [1, 2]
+    assert nums("p1", {1: 9}) == [0, 1, 2]
+    assert nums("p1", {2: 25}) == [0, 1, 2]  # actor 1 absent: cursor 0
+    assert nums("p2", {1: 20}, pinned={1}) == []
+    assert nums("mixed", {1: 25, 2: 5}, pinned={1, 2}) == [0, 1, 2]
+    assert nums("mixed", {1: 25, 2: 15}, pinned={1, 2}) == [1, 2]
+    assert nums("mixed", {1: 25}) == [0, 1, 2]  # unpinned: floor 0
+    assert index.next_num(str(tmp_path / "p1")) == 3
+    assert index.next_num(str(tmp_path / "p9")) == 0
+
+
 def test_native_head_status_reads_tail_segments(tmp_path):
     from flo_spark.sources.flo_segment import (
         encode_event,

@@ -1406,9 +1406,9 @@ def test_r10_checkpoint_widths_stay_pruned(spark, sf_dir, name, monkeypatch):
     recorded = []
     orig = cdfmod.DataFrame.localCheckpoint
 
-    def patched(self, eager=True):
+    def patched(self, *args, **kwargs):
         recorded.append(set(self.columns))
-        return orig(self, eager=eager)
+        return orig(self, *args, **kwargs)
 
     monkeypatch.setattr(cdfmod.DataFrame, "localCheckpoint", patched)
     Q2.REGISTRY[name].fn(spark, sf_dir)

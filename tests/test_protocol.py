@@ -2,6 +2,7 @@
 flo-protocol/src/client.rs), and client<->server sessions over a real
 socket against a native data dir."""
 
+import os
 import threading
 import time
 
@@ -10,6 +11,7 @@ import pytest
 from flo_spark.protocol import wire
 from flo_spark.protocol.client import FloClient, FloProtocolError
 from flo_spark.protocol.server import FloTcpServer
+from flo_spark.sources.flo_segment import encode_event
 
 # ---------------------------------------------------------------------------
 # codec
@@ -319,6 +321,51 @@ def test_server_recovers_heads_from_disk(tmp_path):
             assert [(p.partition_num, p.head) for p in status.partitions] == [
                 (3, 6)
             ]
+
+
+_TORN_N = 5
+#: byte length of the last event the torn-tail tests produce
+_TORN_LAST_LEN = len(encode_event(_TORN_N, 1, None, None, 0, "/torn", b"e-05"))
+
+
+@pytest.fixture(scope="module")
+def torn_server(tmp_path_factory):
+    """One server restarted over a root that holds, per cut, a stream
+    ``c<cut>`` whose p1 active segment lost its last ``cut`` bytes.
+    Each stream runs its recovery scan when first opened."""
+    src = str(tmp_path_factory.mktemp("torn_src"))
+    with FloTcpServer(src) as srv:
+        with FloClient(srv.host, srv.port) as c:
+            for i in range(1, _TORN_N + 1):
+                c.produce(1, "/torn", b"e-%02d" % i)
+    with open(os.path.join(src, "default", "p1", "0.events"), "rb") as f:
+        blob = f.read()
+    root = str(tmp_path_factory.mktemp("torn"))
+    for cut in range(1, _TORN_LAST_LEN):
+        os.makedirs(os.path.join(root, f"c{cut}", "p1"))
+        with open(os.path.join(root, f"c{cut}", "p1", "0.events"), "wb") as f:
+            f.write(blob[:-cut])
+    with FloTcpServer(root) as srv:
+        yield srv
+
+
+@pytest.mark.parametrize("cut", range(1, _TORN_LAST_LEN))
+def test_server_restarts_over_torn_tail(torn_server, cut):
+    """A crash mid-append leaves the last event of the active segment
+    torn at any byte.  That event was never acked, so the restarted
+    server drops it: head n-1, the next produce gets counter n, and a
+    consume returns every whole event plus the new one."""
+    with FloClient(torn_server.host, torn_server.port) as c:
+        status = c.set_event_stream(f"c{cut}")
+        assert [(p.partition_num, p.head) for p in status.partitions] == [
+            (1, _TORN_N - 1)
+        ]
+        eid = c.produce(1, "/torn", b"new")
+        assert (eid.counter, eid.actor) == (_TORN_N, 1)
+        got = list(c.consume(version_vector={1: 0}))
+    assert [(e.id.counter, e.data) for e in got] == [
+        (i, b"e-%02d" % i) for i in range(1, _TORN_N)
+    ] + [(_TORN_N, b"new")]
 
 
 def test_parent_id_round_trips_through_server(server):
