@@ -33,6 +33,10 @@ class FloClient:
         timeout: float = 30.0,
     ):
         self._sock = socket.create_connection((host, port), timeout=timeout)
+        # every message is one small write: Nagle would hold a write
+        # that follows an unanswered one (StopConsuming, then the next
+        # request) until the server's delayed ACK, about 40 ms
+        self._sock.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
         self._framer = wire.Framer()
         self._pending: list = []
         self._op = 0

@@ -10,19 +10,39 @@ Semantics ported (flo-server/src/engine/connection_handler):
   ``NoSuchStream`` error (connection_state.rs:58-76).
 - ProduceEvent -> contiguous per-partition counter assignment, persist
   to the partition's active segment (rotating on byte/event budgets),
-  AckEvent with the assigned id.
+  AckEvent with the assigned id — also while a cursor is open: the
+  protocol is pipelined (op_id correlation, client.rs:102-109), and the
+  reference's async client interleaves produces with an open consume
+  on one socket (flo-client-lib/src/async/mod.rs).
 - NewStartConsuming -> glob validated (InvalidNamespaceGlob on error,
   consumer/mod.rs:111-117), version vector validated (at most one
   entry per partition -> InvalidVersionVector), CursorCreated with the
-  effective batch size, then ReceiveEvent* k-way-merged in (counter,
-  actor) id order across the PINNED partitions only (sync/mod.rs:
-  124-130 — partitions absent from the vv are not read), EndOfBatch
-  after batch_size events (resume on NextBatch, consumer_stream/
-  mod.rs:115-155), AwaitingEvents exactly once at caught-up
-  (client.rs:268-271), live delivery as new events arrive,
-  StopConsuming ends the cursor and the connection returns to idle.
+  effective batch size, then ReceiveEvent* in (counter, actor) id order
+  across the PINNED partitions only (sync/mod.rs:124-130 — partitions
+  absent from the vv are not read), EndOfBatch after batch_size events
+  (resume on NextBatch), AwaitingEvents exactly once at caught-up
+  (client.rs:268-271), live delivery as new events arrive, the event
+  limit or StopConsuming ends the cursor and the connection returns to
+  idle.
 - SetBatchSize outside a consume updates the credit window; during a
   consume it is an InvalidConsumerState error (client.rs:261-262).
+
+A cursor is flo's consumer state machine (consumer_stream/mod.rs:
+115-155) built from one merge, one dispatch and one wait:
+
+- the merge is :meth:`SegmentIndex.merged`, the lazy id-ordered merge
+  the credit-flow stream reader also reads: a file decodes only when
+  delivery reaches it, so a cursor holds one decoded segment per
+  partition and one that stops early never opens the files behind it;
+- ``_Handler._dispatch`` acts on every inbound message, and knows
+  whether a cursor is open;
+- the handler thread blocks only in ``inbox.get()``, in ``_Handler.
+  _next``, which first sends the replies buffered since it last went
+  idle in one write.  The receiver thread puts every message into the
+  inbox, and ``None`` at close.  Before each merge pass a cursor
+  registers its inbox with the stream, under the stream lock, and the
+  next append puts a wake token into it — so an append that lands
+  after the pass went by still wakes the cursor.
 
 Storage is the same on-disk layout every other reader in this engine
 uses (``<root>/<stream>/p<N>/<seg>.events``), read through the same
@@ -39,11 +59,13 @@ from __future__ import annotations
 
 import os
 import queue
+import re
 import socket
 import socketserver
 import struct
 import threading
 import time
+from collections.abc import Iterator
 
 from flo_spark.functions.glob import GlobError, glob_to_regex, is_match_all
 from flo_spark.protocol import wire
@@ -51,17 +73,22 @@ from flo_spark.sources.flo_segment import HEADER_LEN, SegmentIndex, encode_event
 
 DEFAULT_BATCH_SIZE = 10_000  # connection_state.rs:11
 
+#: what ``_Handler._dispatch`` reports to an open cursor; ``_WAKE`` is
+#: also the token an append puts into a registered inbox
+_STOP, _NEXT, _WAKE = "stop", "next", "wake"
+
 
 class _Stream:
     """One event stream: per-partition heads + active segments, an
-    append lock, and a condition to wake waiting tails."""
+    append lock, and the inboxes to wake at the next append."""
 
     def __init__(self, path: str, max_bytes: int, max_events: int):
         self.path = path
         self.max_bytes = max_bytes
         self.max_events = max_events
         self.lock = threading.Lock()
-        self.new_events = threading.Condition(self.lock)
+        #: inboxes that get a wake token at the next append (once)
+        self.waiting: set[queue.Queue] = set()
         #: partition -> [head_counter, active_path, n_events, n_bytes]
         self.parts: dict[int, list] = {}
         os.makedirs(path, exist_ok=True)
@@ -138,7 +165,9 @@ class _Stream:
             st[0] = counter
             st[2] += 1
             st[3] += len(encoded)
-            self.new_events.notify_all()
+            for inbox in self.waiting:
+                inbox.put(_WAKE)
+            self.waiting.clear()
             return wire.EventId(counter, part)
 
     def status(self, op_id: int, name: str) -> wire.StreamStatus:
@@ -149,34 +178,40 @@ class _Stream:
             ]
         return wire.StreamStatus(op_id, name, parts)
 
-    def events_after(self, vv: dict[int, int], ns_regex) -> list[tuple]:
-        """Snapshot of events with counter > vv[partition], pinned to
-        vv's partitions, glob-filtered, in (counter, actor) id order.
-        Files fully below the cursor prune on a header peek; a torn
-        tail (an append racing this read) parks until the next poll —
-        the recovery-scan rule."""
-        index = SegmentIndex(self.path)
-        out = []
-        for d in index.dirs:
-            part = index.dir_actor(d)
-            if part not in vv:
-                continue
-            floor = vv[part]
-            for seg in index.unread(d, vv, vv):
-                out.extend(
-                    ev
-                    for ev in seg.events()
-                    if ev[0] > floor and (ns_regex is None or ns_regex.match(ev[5]))
-                )
-        out.sort(key=lambda e: (e[0], e[1]))
-        return out
+    def read_past(
+        self, vv: dict[int, int], inbox: queue.Queue
+    ) -> Iterator[tuple]:
+        """The events past ``vv`` of its partitions, lazily merged in id
+        order.  ``inbox`` is registered first, under the lock, so the
+        next append wakes it even when this read has already gone by."""
+        with self.lock:
+            self.waiting.add(inbox)
+        return SegmentIndex(self.path).merged(vv, frozenset(vv))
+
+    def appended_since_read(self, inbox: queue.Queue) -> bool:
+        """True once an append has come since ``inbox`` last read."""
+        with self.lock:
+            return inbox not in self.waiting
+
+    def forget(self, inbox: queue.Queue) -> None:
+        with self.lock:
+            self.waiting.discard(inbox)
 
 
 class _Handler(socketserver.BaseRequestHandler):
     """One connection: a receiver thread feeds parsed messages into a
     queue; this thread owns all writes."""
 
+    #: buffered replies past this many bytes are sent without waiting
+    #: for the handler to go idle
+    FLUSH_BYTES = 1 << 16
+
     def setup(self):
+        # replies go out in one write per idle point (``_next``), so
+        # Nagle would only hold the last of them until the client's
+        # delayed ACK, about 40 ms
+        self.request.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
+        self.out = bytearray()
         self.framer = wire.Framer()
         self.inbox: queue.Queue = queue.Queue()
         self.closed = threading.Event()
@@ -200,13 +235,23 @@ class _Handler(socketserver.BaseRequestHandler):
             self.inbox.put(None)  # wake the handler
 
     def _send(self, msg) -> None:
-        self.request.sendall(wire.serialize(msg))
+        self.out += wire.serialize(msg)
+        if len(self.out) >= self.FLUSH_BYTES:
+            self._flush()
 
-    def _next(self, timeout: float | None = None):
-        try:
-            return self.inbox.get(timeout=timeout)
-        except queue.Empty:
-            return None
+    def _flush(self) -> None:
+        self.request.sendall(self.out)
+        self.out.clear()
+
+    def _next(self):
+        """The one blocking call: the next inbox message, after sending
+        every buffered reply if it has to wait for it."""
+        if self.inbox.empty():
+            self._flush()
+        return self.inbox.get()
+
+    def _error(self, op_id: int, kind: int, text: str) -> None:
+        self._send(wire.ErrorMessage(op_id, kind, text))
 
     @property
     def stream(self) -> _Stream:
@@ -214,179 +259,137 @@ class _Handler(socketserver.BaseRequestHandler):
 
     def handle(self):
         while not self.closed.is_set():
-            msg = self._next(timeout=0.2)
-            if msg is None:
-                continue
-            if isinstance(msg, wire.Announce):
-                if msg.consume_batch_size:
-                    self.batch_size = msg.consume_batch_size
-                self._send(self.stream.status(msg.op_id, self.stream_name))
-            elif isinstance(msg, wire.SetEventStream):
-                if self.server.flo.has_stream(msg.name):
-                    self.stream_name = msg.name
-                    self._send(self.stream.status(msg.op_id, msg.name))
-                else:
-                    self._send(
-                        wire.ErrorMessage(
-                            msg.op_id,
-                            wire.ERROR_NO_STREAM,
-                            f"no event stream named '{msg.name}'",
-                        )
-                    )
-            elif isinstance(msg, wire.SetBatchSize):
-                self.batch_size = msg.batch_size
-            elif isinstance(msg, wire.ProduceEvent):
-                try:
-                    eid = self.stream.produce(
-                        msg.partition, msg.namespace, msg.data, msg.parent_id
-                    )
-                    self._send(wire.AckEvent(msg.op_id, eid))
-                except OSError as err:
-                    self._send(
-                        wire.ErrorMessage(
-                            msg.op_id, wire.ERROR_STORAGE_ENGINE_IO, str(err)
-                        )
-                    )
-            elif isinstance(msg, wire.NewStartConsuming):
-                self._consume(msg)
-            elif isinstance(msg, wire.StopConsuming):
-                pass  # no cursor active: ignored, like the reference
+            self._dispatch(self._next())
 
-    # -- consumer state machine ---------------------------------------
+    def _dispatch(self, msg, cursor: int | None = None) -> str | None:
+        """Act on one inbox message.  ``cursor`` is the op id of the
+        open consume, None when there is none.  Returns ``_STOP`` when
+        the cursor or the connection ends, ``_NEXT`` for NextBatch and
+        ``_WAKE`` for a wake token; None otherwise."""
+        if msg is None or (
+            cursor is not None and isinstance(msg, wire.StopConsuming)
+        ):
+            return _STOP
+        if msg is _WAKE:
+            return _WAKE
+        if isinstance(msg, wire.NextBatch):
+            return _NEXT
+        if isinstance(msg, wire.ProduceEvent):
+            try:
+                eid = self.stream.produce(
+                    msg.partition, msg.namespace, msg.data, msg.parent_id
+                )
+                self._send(wire.AckEvent(msg.op_id, eid))
+            except OSError as err:
+                self._error(msg.op_id, wire.ERROR_STORAGE_ENGINE_IO, str(err))
+        elif isinstance(msg, wire.SetBatchSize):
+            if cursor is None:
+                self.batch_size = msg.batch_size
+            else:
+                self._error(
+                    cursor,
+                    wire.ERROR_INVALID_CONSUMER_STATE,
+                    "cannot set batch size while consuming",
+                )
+        elif cursor is not None:
+            pass  # any other message while consuming is protocol misuse
+        elif isinstance(msg, wire.Announce):
+            if msg.consume_batch_size:
+                self.batch_size = msg.consume_batch_size
+            self._send(self.stream.status(msg.op_id, self.stream_name))
+        elif isinstance(msg, wire.SetEventStream):
+            if self.server.flo.has_stream(msg.name):
+                self.stream_name = msg.name
+                self._send(self.stream.status(msg.op_id, msg.name))
+            else:
+                self._error(
+                    msg.op_id,
+                    wire.ERROR_NO_STREAM,
+                    f"no event stream named '{msg.name}'",
+                )
+        elif isinstance(msg, wire.NewStartConsuming):
+            self._consume(msg)
+        # StopConsuming with no cursor open: ignored, like the reference
+        return None
+
+    def _wait(self, cursor: int, until: str) -> bool:
+        """Dispatch inbox messages, blocking in ``_next``, until
+        ``until`` comes (True) or the cursor ends (False)."""
+        while True:
+            ctl = self._dispatch(self._next(), cursor)
+            if ctl == until:
+                return True
+            if ctl == _STOP:
+                return False
+
     def _consume(self, start: wire.NewStartConsuming) -> None:
+        op = start.op_id
         try:
             rx = (
                 None
                 if is_match_all(start.namespace)
-                else __import__("re").compile(glob_to_regex(start.namespace))
+                else re.compile(glob_to_regex(start.namespace))
             )
         except GlobError as err:
-            self._send(
-                wire.ErrorMessage(
-                    start.op_id, wire.ERROR_INVALID_NAMESPACE, str(err)
-                )
-            )
-            return
+            return self._error(op, wire.ERROR_INVALID_NAMESPACE, str(err))
         vv: dict[int, int] = {}
         for eid in start.version_vector:
             if eid.actor in vv:
-                self._send(
-                    wire.ErrorMessage(
-                        start.op_id,
-                        wire.ERROR_INVALID_VERSION_VECTOR,
-                        f"duplicate entry for partition {eid.actor}",
-                    )
+                return self._error(
+                    op,
+                    wire.ERROR_INVALID_VERSION_VECTOR,
+                    f"duplicate entry for partition {eid.actor}",
                 )
-                return
             vv[eid.actor] = eid.counter
-        self._send(wire.CursorCreated(start.op_id, self.batch_size))
+        self._send(wire.CursorCreated(op, self.batch_size))
 
         remaining = (
             None
             if start.max_events == wire.CONSUME_UNLIMITED
             else start.max_events
         )
-        batch_left = self.batch_size
+        credit = self.batch_size
         awaiting_sent = False
         stream = self.stream
-        while not self.closed.is_set():
-            backlog = stream.events_after(vv, rx)
-            for ev in backlog:
-                if batch_left == 0:
-                    self._send(wire.EndOfBatch())
-                    if not self._await_next_batch(start.op_id):
-                        return
-                    batch_left = self.batch_size
-                self._send(
-                    wire.ReceiveEvent(
-                        wire.EventId(ev[0], ev[1]),
-                        wire.EventId(ev[2], ev[3]) if ev[2] else None,
-                        ev[4],
-                        ev[5],
-                        bytes(ev[6]),
-                    )
-                )
-                vv[ev[1]] = max(vv.get(ev[1], 0), ev[0])
-                batch_left -= 1
-                if remaining is not None:
-                    remaining -= 1
-                    if remaining == 0:
-                        return  # event_limit reached: cursor done
-                ctl = self._drain_control(start.op_id)
-                if ctl == "stop":
-                    return
-            if not awaiting_sent:
-                self._send(wire.AwaitingEvents())
-                awaiting_sent = True
-            # wait for new events OR a control message
-            with stream.lock:
-                stream.new_events.wait(timeout=0.2)
-            ctl = self._drain_control(start.op_id)
-            if ctl == "stop":
-                return
-
-    def _produce_inline(self, msg: wire.ProduceEvent) -> None:
-        """Produce + ack while a cursor is active — the protocol is
-        fully pipelined (op_id correlation, client.rs:102-109), so a
-        client may interleave produces with an open consume on one
-        socket (the reference's async connection does exactly this,
-        flo-client-lib/src/async/mod.rs)."""
         try:
-            eid = self.stream.produce(
-                msg.partition, msg.namespace, msg.data, msg.parent_id
-            )
-            self._send(wire.AckEvent(msg.op_id, eid))
-        except OSError as err:
-            self._send(
-                wire.ErrorMessage(
-                    msg.op_id, wire.ERROR_STORAGE_ENGINE_IO, str(err)
-                )
-            )
-
-    def _drain_control(self, op_id: int) -> str | None:
-        """Non-blocking: process control messages that may arrive while
-        a cursor is active."""
-        while True:
-            try:
-                msg = self.inbox.get_nowait()
-            except queue.Empty:
-                return None
-            if msg is None or isinstance(msg, wire.StopConsuming):
-                return "stop"
-            if isinstance(msg, wire.ProduceEvent):
-                self._produce_inline(msg)
-            elif isinstance(msg, wire.SetBatchSize):
-                self._send(
-                    wire.ErrorMessage(
-                        op_id,
-                        wire.ERROR_INVALID_CONSUMER_STATE,
-                        "cannot set batch size while consuming",
+            while True:
+                for ev in stream.read_past(vv, self.inbox):
+                    vv[ev[1]] = ev[0]
+                    if rx is not None and not rx.match(ev[5]):
+                        continue
+                    if credit == 0:
+                        self._send(wire.EndOfBatch())
+                        if not self._wait(op, _NEXT):
+                            return
+                        credit = self.batch_size
+                    self._send(
+                        wire.ReceiveEvent(
+                            wire.EventId(ev[0], ev[1]),
+                            wire.EventId(ev[2], ev[3]) if ev[2] else None,
+                            ev[4],
+                            ev[5],
+                            bytes(ev[6]),
+                        )
                     )
-                )
-            # other messages while consuming are protocol misuse; skip
-
-    def _await_next_batch(self, op_id: int) -> bool:
-        """Block until NextBatch (True) or StopConsuming/close (False)."""
-        while not self.closed.is_set():
-            msg = self._next(timeout=0.2)
-            if msg is None:
-                continue
-            if isinstance(msg, wire.NextBatch):
-                return True
-            if isinstance(msg, wire.StopConsuming):
-                return False
-            if isinstance(msg, wire.ProduceEvent):
-                self._produce_inline(msg)
-                continue
-            if isinstance(msg, wire.SetBatchSize):
-                self._send(
-                    wire.ErrorMessage(
-                        op_id,
-                        wire.ERROR_INVALID_CONSUMER_STATE,
-                        "cannot set batch size while consuming",
-                    )
-                )
-        return False
+                    credit -= 1
+                    if remaining is not None:
+                        remaining -= 1
+                        if remaining == 0:
+                            return  # event_limit reached: cursor done
+                    # a StopConsuming stops delivery before the next event
+                    while not self.inbox.empty():
+                        msg = self.inbox.get_nowait()
+                        if self._dispatch(msg, op) == _STOP:
+                            return
+                if not awaiting_sent:
+                    self._send(wire.AwaitingEvents())
+                    awaiting_sent = True
+                if stream.appended_since_read(self.inbox):
+                    continue  # the next pass reads what this one missed
+                if not self._wait(op, _WAKE):
+                    return
+        finally:
+            stream.forget(self.inbox)
 
     def finish(self):
         self.closed.set()

@@ -24,11 +24,10 @@ shuffle at cluster scale.  Window queries partition by a
 high-cardinality key (custkey/partkey) so state per task stays
 bounded; no driver-side collection anywhere.
 
-Ordering: family-module import order below is NOT the catalog order.
-After all families register, ``REGISTRY`` is reinserted to the frozen
-``_order.CATALOG_ORDER`` so ``queries()`` stays byte-identical with
-the pre-split monolith; entries added after the split follow the
-canonical block in registration order.
+Ordering: ``queries()`` leads with the 50 keys of
+``queries.DRIVER_CHECK_ORDER`` (the driver's window, pinned by name);
+every other entry follows in registration order, i.e. in the family
+import order below.
 """
 
 from __future__ import annotations
@@ -48,19 +47,3 @@ from flo_spark.queries_ext.stats_ml import *  # noqa: F401,F403,E402
 from flo_spark.queries_ext.stats_tests import *  # noqa: F401,F403,E402
 from flo_spark.queries_ext.lakehouse import *  # noqa: F401,F403,E402
 from flo_spark.queries_ext.flo_surface import *  # noqa: F401,F403,E402
-
-from flo_spark.queries_ext._order import CATALOG_ORDER  # noqa: E402
-
-
-def _restore_canonical_order() -> None:
-    """Reinsert REGISTRY keys so the full catalog order is byte-identical
-    with the pre-split monolith (canonical block first, then any entries
-    registered after the split, in their registration order)."""
-    missing = [k for k in CATALOG_ORDER if k not in REGISTRY]
-    assert not missing, f"canonical catalog entries missing: {missing}"
-    post_split = [k for k in REGISTRY if k not in set(CATALOG_ORDER)]
-    for k in list(CATALOG_ORDER) + post_split:
-        REGISTRY[k] = REGISTRY.pop(k)
-
-
-_restore_canonical_order()

@@ -4,8 +4,8 @@ monitors, IVM retractions and streaming ingest/dedup.
 
 Split out of the former monolithic ``queries_ext`` module (round 8);
 registration conventions and the 100 TB scale notes live in the package
-``__init__``.  Catalog order is canonical in ``_order.py`` — adding an
-entry here does NOT perturb existing ``queries()`` positions.
+``__init__``.  ``queries()`` leads with ``DRIVER_CHECK_ORDER``; the
+other entries follow in registration order.
 """
 
 from __future__ import annotations

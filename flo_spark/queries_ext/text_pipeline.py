@@ -5,8 +5,8 @@ audits over the documents corpus.
 
 Split out of the former monolithic ``queries_ext`` module (round 8);
 registration conventions and the 100 TB scale notes live in the package
-``__init__``.  Catalog order is canonical in ``_order.py`` — adding an
-entry here does NOT perturb existing ``queries()`` positions.
+``__init__``.  ``queries()`` leads with ``DRIVER_CHECK_ORDER``; the
+other entries follow in registration order.
 
 localCheckpoint contract (r10, VERDICT r9 #2 / ADVICE r9): every
 ``localCheckpoint()`` in this package marks a genuine fork — a derived
@@ -2557,7 +2557,9 @@ def dp_randomized_response(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM tf GROUP BY term
     ),
     post AS (
-      SELECT term, list(doc_id ORDER BY doc_id) AS top_postings
+      SELECT term,
+             array_to_string(list(doc_id ORDER BY doc_id), ',')
+               AS top_postings
       FROM ranked WHERE rn <= 5 GROUP BY term
     )
     SELECT s.term, s.df, s.total_tf, p.top_postings
@@ -2568,8 +2570,8 @@ def inverted_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Inverted-index construction — the batch artifact BM25 retrieval
     presupposes, built as a relation: per term, document frequency,
     total term frequency, and a CAPPED posting list (the top-5 docs by
-    tf, stored id-sorted so the array is order-canonical across
-    engines).  The cap is the impact-ordered / WAND-style index-time
+    tf, id-sorted and joined with ``,`` so the column is one
+    order-canonical string on both engines).  The cap is the impact-ordered / WAND-style index-time
     pruning rule: high-impact postings stay hot, the full list is the
     same relation uncapped.
 
@@ -2606,7 +2608,12 @@ def inverted_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         tf.withColumn("rn", F.row_number().over(wr))
         .filter(F.col("rn") <= 5)
         .groupBy("term")
-        .agg(F.array_sort(F.collect_list("doc_id")).alias("top_postings"))
+        .agg(
+            F.array_join(
+                F.array_sort(F.collect_list("doc_id")).cast("array<string>"),
+                ",",
+            ).alias("top_postings")
+        )
     )
     return stats.join(post, "term").select(
         "term", "df", "total_tf", "top_postings"

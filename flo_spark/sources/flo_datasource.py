@@ -164,9 +164,12 @@ def _parse_vv(raw: str | None) -> dict[int, int] | None:
 
 @dataclass
 class FloSegmentPartition(InputPartition):
-    """Batch input split: one segment file (flo's storage unit)."""
+    """Batch input split: one segment file (flo's storage unit), and
+    whether it is its dir's active segment, where a torn tail is an
+    append in flight rather than corruption."""
 
     path: str
+    active: bool
 
 
 @dataclass
@@ -211,14 +214,16 @@ class FloBatchReader(DataSourceReader):
     def partitions(self):
         index = SegmentIndex(self.root)
         return [
-            FloSegmentPartition(seg.path)
+            FloSegmentPartition(seg.path, seg.active)
             for d in index.dirs
             for seg in index.unread(d, self.vv, self.vv)
         ]
 
     def read(self, partition: FloSegmentPartition):
         yield from _to_batches(
-            ev for ev in SegmentFile(partition.path).events() if self._keep(ev)
+            ev
+            for ev in SegmentFile(partition.path, active=partition.active).events()
+            if self._keep(ev)
         )
 
 
@@ -430,14 +435,21 @@ class FloStreamReader(DataSourceStreamReader):
 
 class FloCreditStreamReader(SimpleDataSourceStreamReader):
     """Credit-flow tail (A8): at most ``batchsize`` MATCHING events
-    per micro-batch, delivered in global (counter, actor) id order by
-    an explicit k-way merge over per-actor cursors — the
-    multi_partition_reader + batch_size/NextBatch loop
+    per micro-batch, delivered in global (counter, actor) id order —
+    the multi_partition_reader + batch_size/NextBatch loop
     (consumer_stream/mod.rs:115-155) re-based on the SIMPLE stream
     reader API, whose ``read(start)`` hands the reader its own cursor
     and so makes admission control exact (the partitioned
     DataSourceStreamReader API never sees the committed start, so a
     cap there could regress offsets after a restart and redeliver).
+
+    Both reads pull from :meth:`SegmentIndex.merged`, the one lazy
+    id-ordered merge past a version vector — the same merge the TCP
+    server's cursors read.  It holds one decoded segment per partition
+    dir, decodes only the files the cursor frontier overlaps (consumed
+    files prune via per-dir floors) and never opens the files past the
+    budget.  The reader never waits: Spark's trigger decides when to
+    read again.
 
     Cursor rule: an actor's offset advances only over events the merge
     actually PROCESSED (delivered, or scanned-and-glob-skipped — flo
@@ -445,12 +457,8 @@ class FloCreditStreamReader(SimpleDataSourceStreamReader):
     rule as next_matching + the decrement at mod.rs:116-119); an event
     peeked but unprocessed when the budget ran out is re-read next
     trigger.  Data moves through the driver (the simple-reader
-    contract); the lazy per-dir merge bounds driver MEMORY to one
-    decoded segment per partition dir plus the delivered batch, and
-    decode WORK per trigger to the files overlapping the cursor
-    frontier (consumed files prune via per-dir floors; files past the
-    budget are never opened).  Large backfills still belong on the
-    partitioned reader (no ``batchsize`` option)."""
+    contract), so large backfills still belong on the partitioned
+    reader (no ``batchsize`` option)."""
 
     def __init__(self, options):
         self.root = options.get("path")
@@ -469,39 +477,14 @@ class FloCreditStreamReader(SimpleDataSourceStreamReader):
             return {str(a): int(c) for a, c in self.start_vv.items()}
         return {}
 
-    def _dir_streams(self, start: dict):
-        """One LAZY generator per partition dir, yielding that dir's
-        events with counter > start[actor] in id order.  Files decode
-        one at a time, only when the merge actually pulls on them, so
-        driver memory is O(one segment per dir + the heap) rather than
-        O(whole backlog) — and a budget-exhausted read() never opens
-        the files behind it.  ``SegmentIndex.unread`` drops the files
-        the cursor has fully consumed; counters only grow across a
-        dir's rotations, so in-order yield is safe, and within one file
-        we sort defensively (file-sized, bounded)."""
+    def _merged(self, start: dict):
+        """The one lazy id-ordered merge, :meth:`SegmentIndex.merged`,
+        past the offset ``start``."""
         cursor = {int(a): int(c) for a, c in start.items()}
-        index = SegmentIndex(self.root)
-        streams = []
-        for d in index.dirs:
-
-            def gen(segs=index.unread(d, cursor, self.pinned)):
-                for seg in segs:
-                    for ev in sorted(seg.events(), key=lambda e: (e[0], e[1])):
-                        actor = ev[1]
-                        if self.pinned is not None and actor not in self.pinned:
-                            continue
-                        if ev[0] > cursor.get(actor, 0):
-                            yield ev
-
-            streams.append(gen())
-        return streams
+        return SegmentIndex(self.root).merged(cursor, self.pinned)
 
     def read(self, start: dict):
-        import heapq
-
-        merged = heapq.merge(
-            *self._dir_streams(start), key=lambda e: (e[0], e[1])
-        )
+        merged = self._merged(start)
         last: dict[int, int] = {}
         out: list[tuple] = []
         budget = self.batch_size
@@ -522,14 +505,9 @@ class FloCreditStreamReader(SimpleDataSourceStreamReader):
 
     def readBetweenOffsets(self, start: dict, end: dict):
         """Deterministic replay of a recorded (start, end] slice."""
-        import heapq
-
         global_hi = max((int(c) for c in end.values()), default=0)
         rows = []
-        merged = heapq.merge(
-            *self._dir_streams(start), key=lambda e: (e[0], e[1])
-        )
-        for ev in merged:
+        for ev in self._merged(start):
             if ev[0] > global_hi:
                 break  # merge is id-ordered; nothing later qualifies
             if ev[0] <= int(end.get(str(ev[1]), 0)) and (

@@ -38,12 +38,14 @@ decoders — never per-row Python inside a relational plan.
 
 from __future__ import annotations
 
+import heapq
 import io
 import os
 import re
 import struct
 from collections.abc import Collection, Iterator
 from functools import cached_property
+from operator import itemgetter
 
 import pandas as pd
 
@@ -64,6 +66,9 @@ _EPOCH = pd.Timestamp("1970-01-01")
 #: the fixed 44-byte prefix (total_len .. ns_len) as one precompiled
 #: Struct — pack/unpack of the whole envelope head in a single call
 _FIXED = struct.Struct(">I8sHQHQQI")
+
+#: (counter, actor) of a decoded event tuple: flo's id order
+_EVENT_ID = itemgetter(0, 1)
 
 
 def encode_event(
@@ -286,6 +291,10 @@ class SegmentIndex:
       counter minus one is ``<= floor`` (the index-seek analog, A5,
       index.rs:86-129);
     - a new segment takes the dir's max number plus one.
+
+    :meth:`merged` is the one "events past a version vector, in id
+    order" read, shared by the TCP server's cursors and the credit-flow
+    stream reader.
     """
 
     def __init__(self, root: str):
@@ -351,6 +360,39 @@ class SegmentIndex:
             for s, nxt in zip(segs, segs[1:] + [None])
             if nxt is None or nxt.first is None or nxt.first[0] - 1 > floor
         ]
+
+    def merged(
+        self,
+        cursor: dict[int, int],
+        pinned: Collection[int] | None = None,
+    ) -> Iterator[tuple]:
+        """The events past ``cursor`` (``counter > cursor[actor]``; an
+        absent actor counts as 0) of the ``pinned`` actors (None: every
+        actor), in (counter, actor) id order.
+
+        A lazy k-way merge with one stream per dir over the files
+        :meth:`unread` keeps.  A file is decoded only when the merge
+        pulls on it, so memory holds one decoded segment per dir, and a
+        reader that stops early never opens the files behind it.
+        Counters only grow across a dir's segments, so each dir streams
+        file by file; within a file the events are sorted, since a dir
+        need not hold one actor."""
+        cursor = dict(cursor)
+
+        def past(ev: tuple) -> bool:
+            actor = ev[1]
+            if pinned is not None and actor not in pinned:
+                return False
+            return ev[0] > cursor.get(actor, 0)
+
+        def stream(segs: list[SegmentFile]) -> Iterator[tuple]:
+            for seg in segs:
+                yield from sorted(filter(past, seg.events()), key=_EVENT_ID)
+
+        return heapq.merge(
+            *(stream(self.unread(d, cursor, pinned)) for d in self.dirs),
+            key=_EVENT_ID,
+        )
 
     def heads(self, d: str, full_scan: bool = False) -> dict[int, int]:
         """{actor: max counter} in dir ``d``.  Without ``full_scan`` the

@@ -652,6 +652,31 @@ def test_credit_flow_new_actor_history_not_lost(spark, tmp_path):
     assert [(x[0], x[1]) for x in replay] == [(i + 1, 2) for i in range(10)]
 
 
+def test_batch_reader_tolerates_torn_active_tail(tmp_path):
+    """A crashed server leaves a torn record at the tail of a
+    partition's active segment; the batch reader reads the whole
+    events before it, as the server's own recovery does, instead of
+    failing the scan."""
+    from flo_spark.protocol.server import _Stream
+    from flo_spark.sources.flo_datasource import FloBatchReader
+
+    root = str(tmp_path / "torn")
+    stream = _Stream(root, 1 << 30, 1_000_000)
+    for _ in range(5):
+        stream.produce(1, "/a", b"x" * 100, None)
+    seg = os.path.join(root, "p1", "0.events")
+    os.truncate(seg, os.path.getsize(seg) - 30)
+
+    reader = FloBatchReader({"path": root})
+    got = [
+        c
+        for part in reader.partitions()
+        for batch in reader.read(part)
+        for c in batch.column("event_counter").to_pylist()
+    ]
+    assert got == [1, 2, 3, 4]
+
+
 def test_credit_flow_decode_is_lazy_up_to_budget(spark, tmp_path, monkeypatch):
     """With a deep backlog and a small budget, read() must decode only
     the files at the cursor frontier — not the whole backlog (the old

@@ -7,6 +7,7 @@ import math
 import os
 
 import duckdb
+import numpy as np
 import pytest
 
 import __spark_entry__ as entry_mod
@@ -34,7 +35,17 @@ def _duck(sf_dir):
     return con
 
 
+#: array, map, struct and binary values: the driver's pandas
+#: canonicalizer cannot hash them, so an entry must return them as
+#: scalars (e.g. ``array_join``) on both engines
+_NOT_SCALAR = (list, tuple, dict, bytes, bytearray, memoryview, np.ndarray)
+
+
 def _canon(v):
+    if isinstance(v, _NOT_SCALAR):
+        raise TypeError(
+            f"{type(v).__name__} value {v!r:.60}: return a scalar column"
+        )
     if v is None:
         return "NULL"
     if isinstance(v, float):

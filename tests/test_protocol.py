@@ -3,6 +3,7 @@ flo-protocol/src/client.rs), and client<->server sessions over a real
 socket against a native data dir."""
 
 import os
+import sys
 import threading
 import time
 
@@ -294,6 +295,47 @@ def test_live_tail_sees_new_events(server):
         consumer.close()
 
 
+def test_caught_up_consume_returns_without_a_timed_wait(server):
+    """Twenty rounds of produce, then a consume that is caught up, on
+    one connection: the cursor ends on the StopConsuming sent after
+    AwaitingEvents at once, and the next request is answered at once."""
+    with FloClient(server.host, server.port) as c:
+        t0 = time.perf_counter()
+        for _ in range(20):
+            head = c.produce(1, "/round", b"x").counter
+            assert list(c.consume(version_vector={1: head})) == []
+        assert time.perf_counter() - t0 < 2.0
+
+
+def test_consume_decodes_only_the_segments_it_delivers(tmp_path, monkeypatch):
+    """The cursor merge is lazy: with max_events=1 over a partition of
+    three segments, only the first segment file is ever decoded."""
+    from flo_spark.sources.flo_segment import SegmentFile
+
+    with FloTcpServer(str(tmp_path / "d"), max_events_per_segment=2) as srv:
+        with FloClient(srv.host, srv.port) as c:
+            for _ in range(6):
+                c.produce(1, "/a", b"x")
+            assert sorted(os.listdir(tmp_path / "d" / "default" / "p1")) == [
+                "0.events",
+                "1.events",
+                "2.events",
+            ]
+            opened = []
+            real = SegmentFile.events
+
+            def spy(self):
+                opened.append(os.path.basename(self.path))
+                return real(self)
+
+            monkeypatch.setattr(SegmentFile, "events", spy)
+            got = list(c.consume(version_vector={1: 0}, max_events=1))
+            assert [e.id.counter for e in got] == [1]
+            # the cursor ended at its limit; this produce is acked after it
+            assert c.produce(1, "/a", b"x").counter == 7
+    assert opened == ["0.events"], opened
+
+
 def test_named_streams_are_isolated(server):
     with FloClient(server.host, server.port) as c:
         c.produce(1, "/d", b"on-default")
@@ -560,7 +602,9 @@ def test_concurrent_producers_and_tailing_consumers(server):
     """Stress the server's locking: 4 producer connections interleave
     on 2 partitions while 2 live consumers tail — every consumer sees
     every event exactly once in id order, and each partition's counters
-    come out contiguous."""
+    come out contiguous.  A short switch interval interleaves the
+    threads often, so an append that slips between a cursor's read and
+    its wait, and is lost, hangs a consumer."""
     N_PER_PRODUCER = 25
     n_producers = 4
     total = N_PER_PRODUCER * n_producers
@@ -597,11 +641,16 @@ def test_concurrent_producers_and_tailing_consumers(server):
         threading.Thread(target=produce, args=(w,), daemon=True)
         for w in range(n_producers)
     ]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join(timeout=60)
-        assert not t.is_alive(), "stress thread hung"
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+            assert not t.is_alive(), "stress thread hung"
+    finally:
+        sys.setswitchinterval(interval)
     assert not errors, errors
 
     for tag in ("c1", "c2"):
