@@ -37,12 +37,13 @@ A cursor is flo's consumer state machine (consumer_stream/mod.rs:
 - ``_Handler._dispatch`` acts on every inbound message, and knows
   whether a cursor is open;
 - the handler thread blocks only in ``inbox.get()``, in ``_Handler.
-  _next``, which first sends the replies buffered since it last went
-  idle in one write.  The receiver thread puts every message into the
-  inbox, and ``None`` at close.  Before each merge pass a cursor
-  registers its inbox with the stream, under the stream lock, and the
-  next append puts a wake token into it — so an append that lands
-  after the pass went by still wakes the cursor.
+  _next``, which first sends, in one write, the replies an open cursor
+  buffered since the handler last went idle; with no cursor open each
+  reply is written at once.  The receiver thread puts every message
+  into the inbox, and ``None`` at close.  Before each merge pass a
+  cursor registers its inbox with the stream, under the stream lock,
+  and the next append puts a wake token into it — so an append that
+  lands after the pass went by still wakes the cursor.
 
 Storage is the same on-disk layout every other reader in this engine
 uses (``<root>/<stream>/p<N>/<seg>.events``), read through the same
@@ -60,7 +61,6 @@ from __future__ import annotations
 import os
 import queue
 import re
-import socket
 import socketserver
 import struct
 import threading
@@ -202,16 +202,19 @@ class _Handler(socketserver.BaseRequestHandler):
     """One connection: a receiver thread feeds parsed messages into a
     queue; this thread owns all writes."""
 
-    #: buffered replies past this many bytes are sent without waiting
-    #: for the handler to go idle
+    #: a cursor's buffered replies past this many bytes are sent
+    #: without waiting for the handler to go idle
     FLUSH_BYTES = 1 << 16
 
     def setup(self):
-        # replies go out in one write per idle point (``_next``), so
-        # Nagle would only hold the last of them until the client's
-        # delayed ACK, about 40 ms
-        self.request.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
         self.out = bytearray()
+        #: the op id of the open cursor, None when there is none.  A
+        #: cursor's replies (CursorCreated, the events, AwaitingEvents)
+        #: leave in one write when the handler goes idle: written one by
+        #: one, Nagle held each reply that followed an unanswered one
+        #: until the client's delayed ACK, about 40 ms.  Outside a
+        #: cursor each reply is written at once.
+        self.cursor: int | None = None
         self.framer = wire.Framer()
         self.inbox: queue.Queue = queue.Queue()
         self.closed = threading.Event()
@@ -236,7 +239,7 @@ class _Handler(socketserver.BaseRequestHandler):
 
     def _send(self, msg) -> None:
         self.out += wire.serialize(msg)
-        if len(self.out) >= self.FLUSH_BYTES:
+        if self.cursor is None or len(self.out) >= self.FLUSH_BYTES:
             self._flush()
 
     def _flush(self) -> None:
@@ -246,7 +249,7 @@ class _Handler(socketserver.BaseRequestHandler):
     def _next(self):
         """The one blocking call: the next inbox message, after sending
         every buffered reply if it has to wait for it."""
-        if self.inbox.empty():
+        if self.out and self.inbox.empty():
             self._flush()
         return self.inbox.get()
 
@@ -261,11 +264,11 @@ class _Handler(socketserver.BaseRequestHandler):
         while not self.closed.is_set():
             self._dispatch(self._next())
 
-    def _dispatch(self, msg, cursor: int | None = None) -> str | None:
-        """Act on one inbox message.  ``cursor`` is the op id of the
-        open consume, None when there is none.  Returns ``_STOP`` when
-        the cursor or the connection ends, ``_NEXT`` for NextBatch and
-        ``_WAKE`` for a wake token; None otherwise."""
+    def _dispatch(self, msg) -> str | None:
+        """Act on one inbox message.  Returns ``_STOP`` when the cursor
+        or the connection ends, ``_NEXT`` for NextBatch and ``_WAKE``
+        for a wake token; None otherwise."""
+        cursor = self.cursor
         if msg is None or (
             cursor is not None and isinstance(msg, wire.StopConsuming)
         ):
@@ -312,11 +315,11 @@ class _Handler(socketserver.BaseRequestHandler):
         # StopConsuming with no cursor open: ignored, like the reference
         return None
 
-    def _wait(self, cursor: int, until: str) -> bool:
+    def _wait(self, until: str) -> bool:
         """Dispatch inbox messages, blocking in ``_next``, until
         ``until`` comes (True) or the cursor ends (False)."""
         while True:
-            ctl = self._dispatch(self._next(), cursor)
+            ctl = self._dispatch(self._next())
             if ctl == until:
                 return True
             if ctl == _STOP:
@@ -341,8 +344,6 @@ class _Handler(socketserver.BaseRequestHandler):
                     f"duplicate entry for partition {eid.actor}",
                 )
             vv[eid.actor] = eid.counter
-        self._send(wire.CursorCreated(op, self.batch_size))
-
         remaining = (
             None
             if start.max_events == wire.CONSUME_UNLIMITED
@@ -351,7 +352,9 @@ class _Handler(socketserver.BaseRequestHandler):
         credit = self.batch_size
         awaiting_sent = False
         stream = self.stream
+        self.cursor = op
         try:
+            self._send(wire.CursorCreated(op, self.batch_size))
             while True:
                 for ev in stream.read_past(vv, self.inbox):
                     vv[ev[1]] = ev[0]
@@ -359,7 +362,7 @@ class _Handler(socketserver.BaseRequestHandler):
                         continue
                     if credit == 0:
                         self._send(wire.EndOfBatch())
-                        if not self._wait(op, _NEXT):
+                        if not self._wait(_NEXT):
                             return
                         credit = self.batch_size
                     self._send(
@@ -379,16 +382,17 @@ class _Handler(socketserver.BaseRequestHandler):
                     # a StopConsuming stops delivery before the next event
                     while not self.inbox.empty():
                         msg = self.inbox.get_nowait()
-                        if self._dispatch(msg, op) == _STOP:
+                        if self._dispatch(msg) == _STOP:
                             return
                 if not awaiting_sent:
                     self._send(wire.AwaitingEvents())
                     awaiting_sent = True
                 if stream.appended_since_read(self.inbox):
                     continue  # the next pass reads what this one missed
-                if not self._wait(op, _WAKE):
+                if not self._wait(_WAKE):
                     return
         finally:
+            self.cursor = None
             stream.forget(self.inbox)
 
     def finish(self):
