@@ -386,6 +386,11 @@ def _main_native(args, spark, out) -> int:
         counter, actor = _parse_event_id(args.start_position)
         vv = {actor: counter}
     if args.await_new:
+        if args.batch_size is not None:
+            raise SystemExit(
+                "--await with --batch-size targets a parquet event stream; "
+                "omit --native or --batch-size"
+            )
         from flo_spark.streaming.consume_stream import consume_tail_ordered
 
         consumer = consume_tail_ordered(
@@ -393,7 +398,6 @@ def _main_native(args, spark, out) -> int:
             args.stream_dir,
             namespace=args.namespace,
             version_vector=vv,
-            batch_size=args.batch_size,
             sink=lambda rows, _eid: [_print_event(r, out) for r in rows],
             source="native",
         )

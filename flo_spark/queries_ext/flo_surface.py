@@ -685,7 +685,6 @@ def flo_tailer_bounded_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     s.export_native(native, max_events_per_segment=4)
     sweeps: list[list] = []
     t = NativeDirTailer(
-        spark,
         native,
         callback=lambda rows: sweeps.append(list(rows)),
         max_segments_per_sweep=3,

@@ -13,9 +13,16 @@ This is the idiomatic-Spark packaging of the native codec
   offset log, so a consumer restarting MID-SEGMENT resumes from the
   exact next event — the semantics of flo's own consumer cursor
   (flo-server/.../consumer_stream/mod.rs:84-119; vv semantics
-  flo-client-lib/src/sync/mod.rs:124-130).  The file-source-based
-  tails (:func:`flo_segment.tail_flo_segments`) are segment-granular
-  by construction; this source closes that gap.
+  flo-client-lib/src/sync/mod.rs:124-130).  It also tails a LIVE
+  dir exactly: the active segment is re-read every trigger, so events
+  appended to it after an earlier trigger still arrive.
+
+Every Spark read of the native format goes through these readers:
+:func:`~flo_spark.sources.flo_segment.read_flo_segments` (and so
+``EventStream.import_native``) is the batch scan, and
+:func:`~flo_spark.sources.flo_segment.tail_flo_segments` (and so
+``consume_tail_ordered(source="native")`` and ``replicate_native``)
+is the stream tail.
 
 SQL access goes through a temp view
 (``spark.read.format("flo").load(dir).createOrReplaceTempView("t")``):
@@ -100,6 +107,7 @@ from flo_spark.sources.flo_segment import (
     SegmentFile,
     SegmentIndex,
     encode_event,
+    keep_event,
 )
 
 
@@ -202,15 +210,6 @@ class FloBatchReader(DataSourceReader):
         # reduction with per-load scoping, and the vv prunes files
         # through the SegmentIndex, which is not plan-dependent.
 
-    def _keep(self, ev: tuple) -> bool:
-        counter, actor = ev[0], ev[1]
-        if self.vv is not None:
-            if actor not in self.vv or counter <= self.vv[actor]:
-                return False
-        if self.ns_regex is not None and not re.match(self.ns_regex, ev[5]):
-            return False
-        return True
-
     def partitions(self):
         index = SegmentIndex(self.root)
         return [
@@ -219,11 +218,15 @@ class FloBatchReader(DataSourceReader):
             for seg in index.unread(d, self.vv, self.vv)
         ]
 
-    def read(self, partition: FloSegmentPartition):
+    def read(self, partition: FloSegmentPartition | None):
+        if partition is None:
+            # Spark plans one None partition when partitions() is empty:
+            # a dir with no segment files, or a vv that prunes them all
+            return
         yield from _to_batches(
             ev
             for ev in SegmentFile(partition.path, active=partition.active).events()
-            if self._keep(ev)
+            if keep_event(ev, self.vv, self.ns_regex)
         )
 
 
@@ -240,7 +243,13 @@ class FloStreamReader(DataSourceStreamReader):
     are only dropped when the TTL job deletes the file); without it a
     fresh consumer on a large archive pays the scan once.  Truly
     archival scans belong on the distributed batch path
-    (``spark.read.format("flo")`` / ``read_flo_segments``)."""
+    (``spark.read.format("flo")`` / ``read_flo_segments``).
+
+    This is the reader behind ``tail_flo_segments``, and so behind
+    ``consume_tail_ordered(source="native")`` and
+    ``replicate_native``: their checkpoints hold version vectors, and
+    growth of an active segment that an earlier trigger already read
+    is delivered by the next one."""
 
     def __init__(self, options):
         self.root = options.get("path")

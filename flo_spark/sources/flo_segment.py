@@ -40,10 +40,11 @@ from __future__ import annotations
 
 import heapq
 import io
+import json
 import os
 import re
 import struct
-from collections.abc import Collection, Iterator
+from collections.abc import Collection, Iterator, Mapping
 from functools import cached_property
 from operator import itemgetter
 
@@ -54,6 +55,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from flo_spark.functions.glob import glob_to_regex, is_match_all
 from flo_spark.schema import EVENT_SCHEMA, ID_ORDER
 
 MARKER = b"FLO_EVT\n"
@@ -530,64 +532,23 @@ def write_flo_segments(
     return report
 
 
-#: events per decoded Arrow batch — caps decode memory at
-#: O(chunk x avg event size) on top of the (bounded, <= 1 GiB) blob
-#: itself, instead of materializing a whole segment's rows at once
-DECODE_CHUNK_EVENTS = 65_536
-
-
-def _rows_to_frame(rows: list[tuple]) -> pd.DataFrame:
-    out = pd.DataFrame(
-        rows,
-        columns=[
-            "event_counter",
-            "actor",
-            "parent_counter",
-            "parent_actor",
-            "ts_millis",
-            "namespace",
-            "data",
-        ],
-    )
-    out["timestamp"] = _EPOCH + pd.to_timedelta(
-        out.pop("ts_millis"), unit="ms"
-    )
-    out["partition"] = out["actor"]
-    return out[[f.name for f in EVENT_SCHEMA.fields]]
-
-
-def _decode_content(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas body: binaryFile ``content`` column -> event rows,
-    yielded in bounded chunks (the decoder is a generator, so rows
-    stream out of the blob without an all-rows materialization)."""
-    for pdf in batches:
-        for blob in pdf["content"]:
-            rows: list[tuple] = []
-            for ev in decode_segment(bytes(blob)):
-                rows.append(ev)
-                if len(rows) >= DECODE_CHUNK_EVENTS:
-                    yield _rows_to_frame(rows)
-                    rows = []
-            if rows:
-                yield _rows_to_frame(rows)
-
-
 def read_flo_segments(spark: SparkSession, path: str) -> DataFrame:
     """Scan a directory of native flo segment files into the canonical
-    event schema.  One Spark task per segment file (``binaryFile``
-    yields one row per file; segments are <= 1 GiB by the reference
-    default, so a file always fits an executor batch).  ``partition``
-    is taken from each event's actor half — in flo the partition IS
-    the ActorId (SURVEY.md §1.1), so this also reads bare ``*.events``
-    files that a real flo server laid out without hive dirs."""
-    raw = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.events")
-        .option("recursiveFileLookup", "true")
-        .load(path)
-        .select("content")
-    )
-    return raw.mapInPandas(_decode_content, schema=EVENT_SCHEMA)
+    event schema: ``spark.read.format("flo")``, one Spark task per
+    segment file, decoded by :meth:`SegmentFile.events` (a torn tail
+    of an active segment is read up to its last whole event).
+    ``partition`` is taken from each event's actor half — in flo the
+    partition IS the ActorId (SURVEY.md §1.1), so this also reads bare
+    ``*.events`` files that a real flo server laid out without hive
+    dirs.  A missing ``path`` raises FileNotFoundError: the format
+    reads it as an empty dir, and an import of nothing must not pass
+    for a migration."""
+    from flo_spark.sources.flo_datasource import register
+
+    if not os.path.exists(path):
+        raise FileNotFoundError(f"no flo data dir at {path}")
+    register(spark)
+    return spark.read.format("flo").load(path)
 
 
 def tail_flo_segments(
@@ -595,95 +556,72 @@ def tail_flo_segments(
     path: str,
     namespace: str | None = None,
     version_vector=None,
-    max_files_per_trigger: int | None = None,
 ) -> DataFrame:
-    """Streaming consume over a directory of IMMUTABLE native segment
-    files (an archive, an export, a stopped server's data dir) with
-    the standard consume filters (namespace glob, version-vector
-    cursor) on top.  Pair with ``run_to_memory`` /
-    ``consume_tail_ordered``'s sinks exactly like the parquet-backed
-    ``consume_stream``.
+    """Streaming consume over a native flo data dir, archived or live:
+    ``spark.readStream.format("flo")`` with the consume filters as its
+    options.  ``namespace`` is the glob; ``version_vector`` is the
+    start position — only its partitions are read, each past its
+    exclusive bound (None: every partition from 0, new ones picked up
+    as they appear).  The streaming offset is a version vector, so a
+    checkpointed query resumes at the exact next event, also inside
+    an active segment the server is still appending to.  Pair with
+    ``run_to_memory`` / ``consume_tail_ordered``'s sinks exactly like
+    the parquet-backed ``consume_stream``."""
+    from flo_spark.sources.flo_datasource import register
 
-    IMMUTABILITY CONTRACT: Spark's file-stream source reads each file
-    exactly once at listing time — a file that grows afterwards is
-    never re-read.  A LIVE flo server appends into its active
-    (highest-numbered) segment, so tailing a live dir through here
-    would silently capture only the active segment's
-    as-of-listing prefix.  For live dirs use
-    :class:`NativeDirTailer`, which delivers at sealed-segment
-    granularity (a rotated segment is never written again).
-
-    Delivery granularity is one segment file per source "file" —
-    flo's own rotation unit — so ``max_files_per_trigger`` is the
-    credit-flow analog at segment granularity (A8)."""
-    from flo_spark.operators.consume import (
-        namespace_filter,
-        version_vector_filter,
-    )
-
-    # binaryFile's schema is fixed by the format; streaming sources
-    # must state it explicitly (no inference on readStream)
-    binary_file_schema = T.StructType(
-        [
-            T.StructField("path", T.StringType()),
-            T.StructField("modificationTime", T.TimestampType()),
-            T.StructField("length", T.LongType()),
-            T.StructField("content", T.BinaryType()),
-        ]
-    )
-    reader = (
-        spark.readStream.format("binaryFile")
-        .schema(binary_file_schema)
-        .option("pathGlobFilter", "*.events")
-        .option("recursiveFileLookup", "true")
-    )
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    df = reader.load(path).select("content").mapInPandas(
-        _decode_content, schema=EVENT_SCHEMA
-    )
+    register(spark)
+    reader = spark.readStream.format("flo")
+    if namespace is not None:
+        reader = reader.option("namespace", namespace)
     if version_vector is not None:
-        df = df.filter(version_vector_filter(version_vector))
-    ns = namespace_filter(namespace)
-    if ns is not None:
-        df = df.filter(ns)
-    return df
+        vv = {str(int(a)): int(c) for a, c in version_vector.items()}
+        reader = reader.option("startpositions", json.dumps(vv))
+    return reader.load(path)
+
+
+def keep_event(
+    ev: tuple, vv: Mapping[int, int] | None, ns_regex: str | None
+) -> bool:
+    """The consume filters on a decoded event: with a version vector,
+    only its partitions, each past its exclusive bound; with a
+    namespace regex, only matching namespaces."""
+    counter, actor = ev[0], ev[1]
+    if vv is not None and (actor not in vv or counter <= vv[actor]):
+        return False
+    return ns_regex is None or re.match(ns_regex, ev[5]) is not None
 
 
 class NativeDirTailer:
-    """LIVE tail of a flo server's data directory, at sealed-segment
-    granularity.
+    """Sweep-by-sweep tail of a flo data directory at segment
+    granularity, decoded on the driver with no Spark job.
 
-    Spark's file-stream source assumes files are immutable once listed,
-    so :func:`tail_flo_segments` is correct only for archived segment
-    dirs; a live flo server keeps appending into the ACTIVE
-    (highest-numbered) segment after the source would have listed it,
-    and those later events would be silently lost.  This tailer closes
-    that gap the way flo's own storage rules allow: a rotated segment
-    is never written again (segment/mod.rs:65-74 — rotation moves the
-    writer to a new file), so every segment EXCEPT the
-    highest-numbered one per partition dir is sealed and safe to read
-    exactly once.  Each poll processes newly sealed segments through
-    the batch scan path, applies the consume filters, and hands the
-    (counter, actor)-ordered rows to ``callback``; the processed-file
+    A rotated segment is never written again (segment/mod.rs:65-74 —
+    rotation moves the writer to a new file), so every segment EXCEPT
+    the highest-numbered one per dir is sealed and safe to read exactly
+    once.  Each poll decodes the newly sealed segments with
+    :meth:`SegmentFile.events`, keeps the events :func:`keep_event`
+    passes for ``version_vector`` and ``namespace``, and hands them to
+    ``callback`` as one list of ``pyspark.sql.Row`` objects with the
+    EVENT_SCHEMA fields, in (counter, actor) order.  The processed-file
     set persists to ``checkpoint_file`` (written after the callback —
-    at-least-once on crash, exactly like the foreachBatch cursor).
+    at-least-once on crash, exactly like the foreachBatch cursor).  For
+    an event-granular tail of a live dir, use :func:`tail_flo_segments`.
 
-    ``stop(drain_active=True)`` reads the active segments too — correct
-    once the server has stopped or when a final snapshot is acceptable.
+    ``stop(drain_active=True)`` reads the active segments too, up to
+    their last whole event — correct once the server has stopped or
+    when a final snapshot is acceptable.
 
     A sweep is capped at ``max_segments_per_sweep`` files (delivered in
     (partition dir, segment number) order; the remainder carries to the
     next sweep, ``backlog`` reports it): a cold start over a large dir
-    would otherwise scan AND ``collect()`` every historical segment in
-    one batch and spike the driver.  The thread loop and
-    ``drain_active`` both keep sweeping back-to-back while a backlog
-    remains, so the cap bounds memory, not throughput.
+    would otherwise decode every historical segment into one batch and
+    spike the driver.  The thread loop and ``drain_active`` both keep
+    sweeping back-to-back while a backlog remains, so the cap bounds
+    memory, not throughput.
     """
 
     def __init__(
         self,
-        spark: SparkSession,
         path: str,
         callback,
         namespace: str | None = None,
@@ -691,11 +629,16 @@ class NativeDirTailer:
         checkpoint_file: str | None = None,
         max_segments_per_sweep: int = 64,
     ):
-        self.spark = spark
         self.path = path
         self.callback = callback
-        self.namespace = namespace
-        self.version_vector = version_vector
+        self.ns_regex = (
+            None if is_match_all(namespace) else glob_to_regex(namespace)
+        )
+        self.vv = (
+            None
+            if version_vector is None
+            else {int(a): int(c) for a, c in version_vector.items()}
+        )
         self.checkpoint_file = checkpoint_file
         self.max_segments_per_sweep = max_segments_per_sweep
         self.backlog = 0
@@ -703,21 +646,18 @@ class NativeDirTailer:
         self._thread = None
         self._stop_evt = None
         if checkpoint_file and os.path.exists(checkpoint_file):
-            import json
-
             with open(checkpoint_file) as f:
                 self._processed = set(json.load(f))
 
     def poll_once(self, include_active: bool = False) -> int:
         """Process newly sealed segments (plus active ones when
         ``include_active``); returns the number of events delivered."""
-        from flo_spark.operators.consume import (
-            namespace_filter,
-            version_vector_filter,
-        )
+        from pyspark.sql import Row
+
+        from flo_spark.sources.flo_datasource import _simple_row
 
         todo = [
-            seg.path
+            seg
             for seg in SegmentIndex(self.path).files()
             if (include_active or not seg.active)
             and seg.path not in self._processed
@@ -729,24 +669,21 @@ class NativeDirTailer:
         # carries to the next sweep
         self.backlog = max(0, len(todo) - self.max_segments_per_sweep)
         todo = todo[: self.max_segments_per_sweep]
-        df = (
-            self.spark.read.format("binaryFile")
-            .load(todo)
-            .select("content")
-            .mapInPandas(_decode_content, schema=EVENT_SCHEMA)
+        evs = sorted(
+            (
+                ev
+                for seg in todo
+                for ev in seg.events()
+                if keep_event(ev, self.vv, self.ns_regex)
+            ),
+            key=_EVENT_ID,
         )
-        if self.version_vector is not None:
-            df = df.filter(version_vector_filter(self.version_vector))
-        ns = namespace_filter(self.namespace)
-        if ns is not None:
-            df = df.filter(ns)
-        rows = df.orderBy("event_counter", "actor").collect()
+        event_row = Row(*EVENT_SCHEMA.fieldNames())
+        rows = [event_row(*_simple_row(ev)) for ev in evs]
         if rows:
             self.callback(rows)
-        self._processed.update(todo)
+        self._processed.update(seg.path for seg in todo)
         if self.checkpoint_file:
-            import json
-
             tmp = self.checkpoint_file + ".tmp"
             with open(tmp, "w") as f:
                 json.dump(sorted(self._processed), f)

@@ -267,16 +267,17 @@ def consume_tail_ordered(
     and the handle accumulates — stop via ``.stop()``.
 
     ``checkpoint_dir`` is the durable cursor (A3's exactly-once
-    hand-off): the file-source offset log records which segments were
-    delivered, so a NEW consumer started with the same checkpoint
+    hand-off): the offset log records what was delivered (files on a
+    parquet stream, a version vector on a native dir), so a NEW consumer started with the same checkpoint
     resumes exactly after the last acknowledged batch — Spark's own
     version vector, surviving process restarts (flo persists consumer
     positions client-side via VersionVector snapshots; here the
     checkpoint plays that role).
 
-    The checkpoint cursor is SEGMENT-granular (foreachBatch side
-    effects are at-least-once): a consumer that crashes mid-epoch gets
-    that epoch's segments REdelivered on restart.  ``resume_trim``
+    On a parquet stream the checkpoint cursor is SEGMENT-granular
+    (foreachBatch side effects are at-least-once): a consumer that
+    crashes mid-epoch gets that epoch's segments REdelivered on
+    restart.  ``resume_trim``
     closes the gap to flo's event-granular cursor: pass the previous
     incarnation's ``delivered_vv()`` and the redelivered batch is
     trimmed to only the events the crash actually lost — restart
@@ -288,17 +289,19 @@ def consume_tail_ordered(
     may raise to simulate a consumer crash mid-epoch.
 
     ``source="native"`` tails a flo server's native ``.events``
-    directory through the binary codec instead of a parquet
-    EventStream — same ordering, cursor, checkpoint and resume-trim
-    semantics on top.  ``batch_size`` is parquet-only (the credit
-    mapping needs the stream's segment_max_records option); use
-    ``max_files_per_trigger`` for segment-granular credit on native
-    dirs."""
+    directory (live or archived) through ``tail_flo_segments`` instead
+    of a parquet EventStream — same ordering and sink on top.  There
+    the checkpoint cursor is EVENT-granular: the streaming offset is a
+    version vector, so a restart redelivers nothing already committed
+    and events appended to an active segment after an earlier trigger
+    still arrive.  ``batch_size`` and ``max_files_per_trigger`` are
+    parquet-only (both map onto the file source's files per trigger)
+    and are rejected for native dirs."""
     if source == "native":
-        if batch_size is not None:
+        if batch_size is not None or max_files_per_trigger is not None:
             raise ValueError(
-                "batch_size is parquet-only; use max_files_per_trigger "
-                "for native segment dirs"
+                "batch_size and max_files_per_trigger are parquet-only; "
+                "a native dir tails event by event"
             )
         from flo_spark.sources.flo_segment import tail_flo_segments
 
@@ -307,7 +310,6 @@ def consume_tail_ordered(
             stream_path,
             namespace=namespace,
             version_vector=version_vector,
-            max_files_per_trigger=max_files_per_trigger,
         )
         if resume_trim is not None:
             df = df.filter(resume_trim_filter(resume_trim))

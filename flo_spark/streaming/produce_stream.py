@@ -90,22 +90,18 @@ def replicate_native(
     """Live replication of a flo server's native ``.events`` data dir
     into a parquet EventStream — the CONTINUOUS form of
     ``EventStream.import_native``: run the reference server and this
-    engine side by side, and every segment the server rotates out
-    lands here as one micro-batch, appended verbatim (ids, timestamps
+    engine side by side, and every event the server appends lands
+    here in a micro-batch, appended verbatim (ids, timestamps
     and lineage preserved — no re-assignment, unlike
     :func:`produce_stream`).
 
     The target stream must be written ONLY by this replicator:
     preserved counters cannot interleave with produced ones.  The
-    source dir is read through the file-stream source, so the
-    IMMUTABILITY CONTRACT of ``tail_flo_segments`` applies: replicate
-    an archive/stopped-server dir directly, or drive a live server's
-    dir through :class:`~flo_spark.sources.flo_segment.NativeDirTailer`
-    with ``stream.append_verbatim`` as the callback (sealed-segment
-    delivery, no partial-segment capture).  With
-    ``checkpoint_dir`` the source's file log records which segments
-    replicated, so restarts resume at the un-replicated tail
-    (segment-granular, same cursor semantics as the consume side).
+    source dir is read through ``tail_flo_segments``, whose offset is
+    a version vector: with ``checkpoint_dir`` a restart resumes at the
+    exact next event, including events the server appended to an
+    active segment after an earlier drain read it (event-granular,
+    same cursor semantics as the consume side).
     """
     from flo_spark.sources.flo_segment import tail_flo_segments
 

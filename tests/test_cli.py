@@ -173,6 +173,18 @@ def test_native_bench_produce_rejected(spark, tmp_path):
         )
 
 
+def test_native_await_batch_size_rejected(spark, tmp_path):
+    """-b maps onto a parquet stream's files per trigger; a native dir
+    tails event by event, so the combination exits with a message."""
+    with pytest.raises(SystemExit, match="omit --native"):
+        main(
+            ["--stream-dir", str(tmp_path), "--native", "consume",
+             "--await", "-b", "5"],
+            spark=spark,
+            out=io.StringIO(),
+        )
+
+
 def test_serve_runs_the_tcp_server(tmp_path):
     """`serve` exposes the wire protocol over a native data dir — no
     Spark session needed; a remote client produces and consumes."""

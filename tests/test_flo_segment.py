@@ -322,6 +322,10 @@ def test_ordered_tail_over_native_dir(spark, tmp_path):
     assert len(got) == 30
     with pytest.raises(ValueError, match="parquet-only"):
         consume_tail_ordered(spark, path, source="native", batch_size=5)
+    with pytest.raises(ValueError, match="parquet-only"):
+        consume_tail_ordered(
+            spark, path, source="native", max_files_per_trigger=1
+        )
 
 
 def test_replicate_native_live_migration(spark, tmp_path):
@@ -366,6 +370,108 @@ def test_replicate_native_live_migration(spark, tmp_path):
     assert s.consume().count() == 40  # no duplicates
 
 
+def test_replicate_native_delivers_growth_of_a_read_active_segment(
+    spark, tmp_path
+):
+    """A live server appends into the active segment that an earlier
+    drain already read; the next drain with the same checkpoint
+    replicates exactly the appended events (a file-stream source lists
+    each file once and would never see them)."""
+    from flo_spark.sources.event_table import EventStream
+    from flo_spark.streaming.produce_stream import replicate_native
+
+    def evs(lo, hi):
+        return [
+            (c, 1, None, None, 1_700_000_000_000 + c, "/live", b"v")
+            for c in range(lo, hi)
+        ]
+
+    server = tmp_path / "server"
+    (server / "p1").mkdir(parents=True)
+    active = server / "p1" / "0.events"
+    active.write_bytes(encode_segment(iter(evs(1, 6)), 0, 0))
+
+    s = EventStream.create(spark, str(tmp_path / "replica"), num_partitions=1)
+    ckpt = str(tmp_path / "ckpt")
+    replicate_native(s, str(server), checkpoint_dir=ckpt)
+    assert s.head() == {1: 5}
+
+    with open(active, "ab") as f:
+        for ev in evs(6, 9):
+            f.write(encode_event(*ev))
+    replicate_native(s, str(server), checkpoint_dir=ckpt)
+    assert sorted(r.event_counter for r in s.consume().collect()) == list(
+        range(1, 9)
+    )
+
+
+def _tear(path):
+    """Append one event cut 5 bytes short: a crash mid-append."""
+    ev = encode_event(10_000, 1, None, None, 0, "/torn", b"y" * 20)
+    with open(path, "ab") as f:
+        f.write(ev[:-5])
+
+
+def test_torn_tail_is_read_to_the_last_whole_event_only_when_active(
+    spark, tmp_path
+):
+    """A crashed server leaves its active segment ending in a torn
+    event.  The batch scan, import_native and the tailer's final drain
+    return every whole event; the same tear in a sealed segment is
+    corruption and still raises."""
+    import shutil
+
+    from flo_spark.schema import EVENT_SCHEMA
+    from flo_spark.sources.event_table import EventStream
+    from flo_spark.sources.flo_segment import CorruptRecord, NativeDirTailer
+
+    rows = [
+        (c, 1, None, None, datetime(2024, 2, 1, tzinfo=UTC), "/t", b"d", 1)
+        for c in range(1, 16)
+    ]
+    native = str(tmp_path / "crashed")
+    write_flo_segments(
+        spark.createDataFrame(rows, EVENT_SCHEMA),
+        native,
+        max_events_per_segment=10,
+    )
+    sealed = str(tmp_path / "sealed")
+    shutil.copytree(native, sealed)
+    _tear(os.path.join(native, "partition=1", "2.events"))  # active
+    want = list(range(1, 16))
+
+    back = read_flo_segments(spark, native).select("event_counter")
+    assert sorted(r.event_counter for r in back.collect()) == want
+    s = EventStream.create(spark, str(tmp_path / "stream"), num_partitions=1)
+    assert s.import_native(native) == 15
+    got = []
+    NativeDirTailer(native, callback=got.extend).stop(drain_active=True)
+    assert [r.event_counter for r in got] == want
+
+    _tear(os.path.join(sealed, "partition=1", "1.events"))
+    with pytest.raises(Exception, match="CorruptRecord"):
+        read_flo_segments(spark, sealed).collect()
+    with pytest.raises(CorruptRecord):
+        NativeDirTailer(sealed, callback=got.extend).poll_once()
+
+
+def test_read_flo_segments_missing_dir_raises_empty_dir_reads_empty(
+    spark, tmp_path
+):
+    """A missing dir is an error, not an empty import; an existing dir
+    with no segment files reads as zero events."""
+    from flo_spark.sources.event_table import EventStream
+
+    missing = str(tmp_path / "no_such_dir")
+    with pytest.raises(FileNotFoundError):
+        read_flo_segments(spark, missing)
+    s = EventStream.create(spark, str(tmp_path / "stream"), num_partitions=1)
+    with pytest.raises(FileNotFoundError):
+        s.import_native(missing)
+    (tmp_path / "empty").mkdir()
+    assert read_flo_segments(spark, str(tmp_path / "empty")).count() == 0
+
+
 def test_segment_rank_correct_across_range_buckets(spark, tmp_path):
     """The distributed rank (range buckets + prefix-sum offsets) must
     reproduce exact per-partition id order: with many more rows than
@@ -399,11 +505,10 @@ def test_segment_rank_correct_across_range_buckets(spark, tmp_path):
             assert seg_counters == want[(s - 1) * 25 : s * 25]
 
 
-def test_native_dir_tailer_sealed_granularity(spark, tmp_path):
+def test_native_dir_tailer_sealed_granularity(tmp_path):
     """The live-dir tailer must never capture a partial active segment:
     an active segment that GROEW after a poll is delivered in full once
     it rotates (the file-stream source would have lost the growth)."""
-    from flo_spark.schema import EVENT_SCHEMA
     from flo_spark.sources.flo_segment import NativeDirTailer
 
     pdir = tmp_path / "live" / "partition=1"
@@ -424,7 +529,6 @@ def test_native_dir_tailer_sealed_granularity(spark, tmp_path):
     got = []
     ckpt = str(tmp_path / "tailer.json")
     t = NativeDirTailer(
-        spark,
         str(tmp_path / "live"),
         callback=lambda rows: got.extend(r.event_counter for r in rows),
         checkpoint_file=ckpt,
@@ -446,7 +550,6 @@ def test_native_dir_tailer_sealed_granularity(spark, tmp_path):
     # a new tailer on the same checkpoint redelivers nothing
     got2 = []
     t2 = NativeDirTailer(
-        spark,
         str(tmp_path / "live"),
         callback=lambda rows: got2.extend(rows),
         checkpoint_file=ckpt,
@@ -455,9 +558,8 @@ def test_native_dir_tailer_sealed_granularity(spark, tmp_path):
     assert got2 == []
 
 
-def test_native_dir_tailer_thread_loop(spark, tmp_path):
+def test_native_dir_tailer_thread_loop(tmp_path):
     """start()/stop() drive poll_once on a background thread."""
-    from flo_spark.schema import EVENT_SCHEMA
     from flo_spark.sources.flo_segment import NativeDirTailer
 
     pdir = tmp_path / "live" / "partition=1"
@@ -472,7 +574,7 @@ def test_native_dir_tailer_thread_loop(spark, tmp_path):
 
     got = []
     t = NativeDirTailer(
-        spark, str(tmp_path / "live"), callback=got.extend
+        str(tmp_path / "live"), callback=got.extend
     ).start(poll_interval=0.2)
     deadline = time.time() + 30
     while not got and time.time() < deadline:
@@ -481,7 +583,7 @@ def test_native_dir_tailer_thread_loop(spark, tmp_path):
     assert [r.event_counter for r in got] == [1, 2]
 
 
-def test_native_dir_tailer_bounded_sweep(spark, tmp_path):
+def test_native_dir_tailer_bounded_sweep(tmp_path):
     """VERDICT r7 item 7: a cold start over a dir with many pending
     sealed segments must NOT collect them all in one sweep — each
     poll_once processes at most max_segments_per_sweep files in
@@ -503,7 +605,6 @@ def test_native_dir_tailer_bounded_sweep(spark, tmp_path):
 
     batches = []
     t = NativeDirTailer(
-        spark,
         str(tmp_path / "live"),
         callback=lambda rows: batches.append(
             [r.event_counter for r in rows]
